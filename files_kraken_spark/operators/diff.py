@@ -5,14 +5,21 @@ differences (``monitoring/_monitoring.py:39-50``) and merges change
 sets with list concat (``:31-34``). Columnar form: two anti-joins on
 the key plus a tagged union. Catalyst/AQE picks broadcast vs shuffle
 per side size; at 100 TB the diff is one shuffle on the path key.
+``table_diff`` is the same diff over Arrow tables on the driver — the
+watcher's form, for trees inside ``list_files``'s ~1M-entry range.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 CREATED, DELETED = "created", "deleted"
+CHANGE_ARROW_SCHEMA = pa.schema(
+    [("path", pa.string()), ("name", pa.string()), ("change", pa.string())]
+)
 
 
 def snapshot_diff(prev: DataFrame, cur: DataFrame, key: str = "path") -> DataFrame:
@@ -25,6 +32,31 @@ def snapshot_diff(prev: DataFrame, cur: DataFrame, key: str = "path") -> DataFra
         "change", F.lit(DELETED)
     )
     return created.unionByName(deleted)
+
+
+def table_diff(prev: pa.Table | None, cur: pa.Table) -> pa.Table:
+    """D1 on the driver: ``(path, name, change)`` rows for the non-dir
+    rows of two FILE_SCHEMA Arrow tables (``prev`` needs only ``path``
+    and ``is_dir``; None is an empty snapshot). Same multiset as
+    ``snapshot_diff`` over the non-dir paths: duplicate paths stay."""
+
+    def files(t: pa.Table | None) -> pa.Array:
+        if t is None:
+            return pa.array([], pa.string())
+        return t.filter(pc.invert(t["is_dir"]))["path"].combine_chunks()
+
+    before, after = files(prev), files(cur)
+    created = after.filter(pc.invert(pc.is_in(after, value_set=before)))
+    deleted = before.filter(pc.invert(pc.is_in(before, value_set=after)))
+    paths = pa.concat_arrays([created, deleted])
+    return pa.Table.from_arrays(
+        [
+            paths,
+            pc.replace_substring_regex(paths, "^.*/", ""),
+            pa.array([CREATED] * len(created) + [DELETED] * len(deleted), pa.string()),
+        ],
+        schema=CHANGE_ARROW_SCHEMA,
+    )
 
 
 def with_sort_key(

@@ -1157,10 +1157,12 @@ def _mean_vector_agg(vec: "F.Column", dim: int, out: str) -> "F.Column":
     (round 14, guide §2.3/§1.2-1: the posexplode multiplied every
     vector into ``dim`` (key, dim, val) rows through a Generate and a
     ``dim``-times-larger hash-aggregate, then paid a SECOND exchange
-    just to collect_list the elements back into an array). ``F.get``
-    (null on out-of-bounds) + count(element) keep ragged/null-element
-    inputs on the exploded shape's semantics: absent elements
-    contribute to neither sum nor count."""
+    just to collect_list the elements back into an array).
+    Precondition: the vectors hold no NULL elements. Ragged (short)
+    arrays keep the exploded shape's semantics — ``F.get`` is null out
+    of bounds, so an absent element adds to neither sum nor count, as
+    posexplode emitted no row for it — but an explicit in-array NULL
+    drops out of the count here while the exploded shape counted it."""
     el = [F.get(vec, i) for i in range(dim)]
     return F.array(*[F.round(F.sum(e), 6) / F.count(e) for e in el]).alias(out)
 

@@ -8,8 +8,10 @@ was an artifact (the reference's own tests immediately flatten it).
 
 Two scan strategies:
 
-- ``list_files`` — driver-side walk → ``createDataFrame``. Right for
-  roots with up to ~1M entries (metadata only, no content I/O).
+- ``list_files`` — driver-side walk (``walk_table``, an Arrow table)
+  → ``createDataFrame``. Right for roots with up to ~1M entries
+  (metadata only, no content I/O). The watcher diffs ``walk_table``'s
+  output on the driver without Spark (``streaming/runtime.py``).
 - ``list_files_distributed`` — the 100 TB path: enumerate the first
   ``fanout_depth`` levels on the driver (cheap), then walk each
   subtree inside executors via ``mapPartitions``. Listing network
@@ -27,7 +29,9 @@ import os
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
@@ -48,6 +52,7 @@ FILE_SCHEMA = StructType(
         StructField("mtime_us", LongType(), True),
     ]
 )
+FILE_ARROW_SCHEMA = to_arrow_schema(FILE_SCHEMA)
 
 
 @dataclass(frozen=True)
@@ -122,6 +127,28 @@ def _walk(
             yield (e.path, e.name, root, _depth, False, st.st_size, int(st.st_mtime * 1e6))
 
 
+def walk_table(
+    roots: str | list[str],
+    max_depth: int | None = None,
+    matcher: NameMatcher | None = None,
+    dir_matcher: NameMatcher | None = None,
+    keep_empty_dirs: bool = False,
+) -> pa.Table:
+    """S1/S6 — metadata walk of one or more roots on the driver → an
+    Arrow table with FILE_SCHEMA's columns (no Spark job)."""
+    roots = [roots] if isinstance(roots, str) else list(roots)
+    rows = [
+        row
+        for r in roots
+        for row in _walk(os.path.abspath(r), max_depth, matcher, dir_matcher, keep_empty_dirs)
+    ]
+    columns = list(zip(*rows)) if rows else [()] * len(FILE_ARROW_SCHEMA)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, FILE_ARROW_SCHEMA)],
+        schema=FILE_ARROW_SCHEMA,
+    )
+
+
 def list_files(
     spark: SparkSession,
     roots: str | list[str],
@@ -131,13 +158,8 @@ def list_files(
     keep_empty_dirs: bool = False,
 ) -> DataFrame:
     """S1/S6 — metadata scan of one or more roots → flat DataFrame."""
-    roots = [roots] if isinstance(roots, str) else list(roots)
-    rows = [
-        row
-        for r in roots
-        for row in _walk(os.path.abspath(r), max_depth, matcher, dir_matcher, keep_empty_dirs)
-    ]
-    return spark.createDataFrame(rows, FILE_SCHEMA)
+    table = walk_table(roots, max_depth, matcher, dir_matcher, keep_empty_dirs)
+    return spark.createDataFrame(table, FILE_SCHEMA)
 
 
 def list_files_distributed(

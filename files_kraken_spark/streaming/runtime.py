@@ -3,12 +3,16 @@
 The reference's poll loop re-scans, diffs against a JSON-backed
 snapshot, and pushes ``Changes`` through an event bus into the
 builder (``monitoring/_monitoring.py:270-304``). Here each poll tick
-is one micro-batch: scan → anti-join diff (created AND deleted —
-Spark's own file stream source only sees additions) → per-blueprint
-assembly → state-table commit → snapshot commit. ``Trigger.
-AvailableNow`` semantics = ``run_once``; ``processingTime`` =
-``run(poll_interval=…)``; the reference's ``exit_time``/``exit_file``
-stop conditions are preserved (R2).
+is one micro-batch: scan → diff (created AND deleted — Spark's own
+file stream source only sees additions) → per-blueprint assembly →
+state-table commit → snapshot commit. The scan, the diff and the
+snapshot commit run on the driver over Arrow tables, as Structured
+Streaming's file source keeps its listing and seen-files log on the
+driver: an idle tick runs no Spark job, and only a non-empty change
+set becomes a DataFrame (one local relation for all watchers).
+``Trigger.AvailableNow`` semantics = ``run_once``;
+``processingTime`` = ``run(poll_interval=…)``; the reference's
+``exit_time``/``exit_file`` stop conditions are preserved (R2).
 
 ``start_stream`` additionally wires a true Structured Streaming file
 source (created-side only) with ``foreachBatch`` running the same
@@ -23,34 +27,32 @@ import time
 from dataclasses import dataclass, field
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..blueprint import Blueprint
 from ..operators.assemble import assemble, match_batch
-from ..operators.diff import snapshot_diff
-from ..sources.listing import FILE_SCHEMA, NameMatcher, list_files
+from ..operators.diff import table_diff
+from ..sources.listing import NameMatcher, list_files, walk_table
 from ..sources.snapshot import SnapshotStore
 from ..store import StateStore
 
 
 @dataclass
 class PollBatch:
-    """One watcher tick's output.
+    """One watcher tick's output: ``(path, name, change)`` rows as an
+    Arrow table.
 
     ``commit()`` durably advances the snapshot and is invoked by the
     runtime only AFTER downstream processing succeeds — a crash between
     diff and state commit re-polls the same changes next tick
     (at-least-once; the reference's crash window at
     ``monitoring/_monitoring.py:71-76`` is at-most-once).
-    ``release()`` always runs and frees the tick's cached frames —
-    Spark's CacheManager holds plan-keyed entries until explicit
-    unpersist, so relying on GC leaks storage across a long poll loop.
     """
 
-    changes: DataFrame
-    commit: Callable[[], None]
-    release: Callable[[], None]
+    changes: pa.Table
+    commit: Callable[[], object]
 
 
 @dataclass
@@ -66,55 +68,38 @@ class Watcher:
     timeout: float = 10.0  # reference default poll interval (R1)
     _last_poll: float = field(default=0.0, repr=False)
 
-    def scan(self, spark: SparkSession) -> DataFrame:
-        return list_files(
-            spark,
-            self.roots,
+    def _options(self) -> dict:
+        return dict(
             max_depth=self.max_depth,
             matcher=self.matcher,
             dir_matcher=self.dir_matcher,
             keep_empty_dirs=self.keep_empty_dirs,
         )
 
-    def poll(self, spark: SparkSession) -> PollBatch | None:
+    def scan(self, spark: SparkSession) -> DataFrame:
+        return list_files(spark, self.roots, **self._options())
+
+    def poll(self, spark: SparkSession | None = None) -> PollBatch | None:
         """One tick: scan, diff vs snapshot
-        (``monitoring/_monitoring.py:71-76``). Returns a PollBatch of
-        (path, name, change) rows, or None when nothing changed.
+        (``monitoring/_monitoring.py:71-76``), all on the driver — no
+        Spark job runs, so ``spark`` is unused. Returns a PollBatch, or
+        None when nothing changed.
 
         The snapshot commit is DEFERRED into ``PollBatch.commit`` so
-        the caller advances it only after processing succeeds. The scan
-        is cached: the committed snapshot must be the exact tree that
-        was diffed, not a re-scan that could silently absorb files
-        created mid-tick."""
+        the caller advances it only after processing succeeds. It
+        commits the walked table itself: the snapshot must be the exact
+        tree that was diffed, not a re-scan that could silently absorb
+        files created mid-tick."""
         store = SnapshotStore(self.snapshot_dir)
-        prev = store.load(spark, FILE_SCHEMA).filter(~F.col("is_dir"))
-        cur = self.scan(spark).cache()
-        files = cur.filter(~F.col("is_dir"))
-        changes = snapshot_diff(prev.select("path"), files.select("path"))
-        changes = changes.withColumn(
-            "name", F.element_at(F.split(F.col("path"), "/"), -1)
-        ).cache()
-        if changes.limit(1).count() == 0:
-            changes.unpersist()
-            cur.unpersist()
+        cur = walk_table(self.roots, **self._options())
+        changes = table_diff(store.read(["path", "is_dir"]), cur)
+        if changes.num_rows == 0:
             return None
+        return PollBatch(changes=changes, commit=lambda: store.save(cur))
 
-        def _release() -> None:
-            changes.unpersist()
-            cur.unpersist()
-
-        return PollBatch(
-            changes=changes.select("path", "name", "change"),
-            commit=lambda: store.save(cur),
-            release=_release,
-        )
-
-    def reindex_changes(self, spark: SparkSession) -> DataFrame:
+    def reindex_changes(self) -> pa.Table:
         """D6 — replay the whole current tree as 'created'."""
-        cur = self.scan(spark).filter(~F.col("is_dir"))
-        return cur.select(
-            "path", "name", F.lit("created").alias("change")
-        )
+        return table_diff(None, walk_table(self.roots, **self._options()))
 
 
 class Workflow:
@@ -249,36 +234,19 @@ class Workflow:
                 continue
             w._last_poll = now
             if force_reindex:
-                polled.append(
-                    PollBatch(
-                        changes=w.reindex_changes(self.spark),
-                        commit=lambda: None,
-                        release=lambda: None,
-                    )
-                )
-            else:
-                pb = w.poll(self.spark)
-                if pb is not None:
-                    polled.append(pb)
+                polled.append(PollBatch(w.reindex_changes(), commit=lambda: None))
+            elif (pb := w.poll(self.spark)) is not None:
+                polled.append(pb)
         if not polled:
             return 0
-        changes = polled[0].changes
-        for pb in polled[1:]:
-            changes = changes.unionByName(pb.changes)  # D4
-        changes = changes.cache()
-        try:
-            n = changes.count()
-            if n:
-                self.process_changes(changes)
-            # snapshots advance only after every blueprint committed —
-            # a failure above re-polls the same diff next tick
-            for pb in polled:
-                pb.commit()
-            return n
-        finally:
-            changes.unpersist()
-            for pb in polled:
-                pb.release()
+        table = pa.concat_tables([pb.changes for pb in polled])  # D4
+        if table.num_rows:
+            self.process_changes(self.spark.createDataFrame(table))
+        # snapshots advance only after every blueprint committed —
+        # a failure above re-polls the same diff next tick
+        for pb in polled:
+            pb.commit()
+        return table.num_rows
 
     def _time_to_exit(self) -> bool:
         """R2 — wall-clock or sentinel-file stop

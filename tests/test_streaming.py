@@ -259,6 +259,26 @@ def test_no_cache_accumulation_across_ticks(spark, tmp_path, bp):
     assert not added
 
 
+def test_idle_tick_runs_no_spark_job(spark, tmp_path, bp):
+    """With nothing changed, the scan, diff and snapshot read all run on
+    the driver: an idle `run_once` submits no Spark job."""
+    root = tmp_path / "watch"
+    root.mkdir()
+    (root / "sample_1.lane_1.fastq.gz").write_text("fq")
+    wf = Workflow(spark, "t14", [bp], data_dir=str(tmp_path / "wfdata"))
+    wf.add_watcher(str(root), timeout=0)
+    assert wf.run_once() == 1
+    sc = spark.sparkContext
+    sc.setJobGroup("idle-tick", "idle tick")
+    try:
+        assert wf.run_once() == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("idle-tick")) == []
+
+
 def test_snapshot_commit_deferred_until_processing_succeeds(spark, tmp_path, bp):
     """At-least-once: a crash during assembly must NOT advance the
     snapshot, so the same changes are re-polled next tick (the
