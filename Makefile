@@ -7,7 +7,7 @@
 SHELL := /bin/bash
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: verify oracle plan test bench
+.PHONY: verify oracle plan test perfsmoke bench
 
 verify: oracle plan test
 
@@ -23,8 +23,13 @@ oracle:
 plan:
 	python tools/plan_audit.py $(SF_DIR)
 
+# the Tier-1 command from ROADMAP.md, verbatim
 test:
-	python -m pytest tests/ -x -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# benchmark smoke test (not part of Tier-1; a few minutes)
+perfsmoke:
+	python -m pytest perfbench/test_smoke.py -q
 
 bench:
 	python bench.py

@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from files_kraken_spark.blueprint import Blueprint
-from files_kraken_spark.cow_store import CowStateStore
+from files_kraken_spark.store import StateStore
 from files_kraken_spark.operators.corpus import (
     global_shuffle_order,
     leakage_safe_split,
@@ -74,11 +74,11 @@ def main(sf_dir: str) -> None:
         .parquet(os.path.join(out, "train"))
     )
 
-    # 6. commit run metadata through the copy-on-write store (atomic,
-    #    object-store-safe — a crashed run never corrupts the pointer)
+    # 6. commit run metadata through the copy-on-write state store
+    #    (atomic: a crashed run leaves the previous commit readable)
     bp = Blueprint(name="PrepRuns", required={"key": (r"(\w+)", 1)},
                    optional={"description": (r"desc_(\w+)", 1)})
-    store = CowStateStore(os.path.join(out, "state"))
+    store = StateStore(os.path.join(out, "state"))
     meta = spark.createDataFrame(
         [(bp.name, "run_1", "run_1",
           f"docs={n0} kept={n1} deduped={n2}", [])],

@@ -84,7 +84,6 @@ def workflow_from_config(spark, cfg: dict) -> Workflow:
         data_dir=cfg.get("data_dir"),
         exit_time=cfg.get("exit_time"),
         exit_file=cfg.get("exit_file"),
-        state_backend=cfg.get("state_backend", "parquet"),
     )
     matcher = None
     if "matcher" in cfg:

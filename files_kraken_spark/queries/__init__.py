@@ -64,256 +64,21 @@ from . import view_maintenance  # noqa: E402,F401
 from . import phash_maintenance  # noqa: E402,F401
 
 # A budget-capped correctness pass walks the registry in order and may
-# only reach a prefix. Round-14 order (optimization round 2, round-13
-# verdict item 1): the driver's 50-name window never reached the 23
-# similarity.py riders or the dedup shingle-pair backbone that round
-# 13 REWROTE — the build-phase prefix pushed them out. This round the
-# prefix leads with the optimizer-touched queries (ANN-trainer family,
-# staged-pair backbone riders, and the round-14 targets: minhash-LSH
-# verify fusion, label-prop/BFS edge pin, cooccurrence routing) so the
-# driver hash-certifies exactly the changed code. Names and semantics
-# of existing queries are byte-stable — only iteration order changes.
-_OPT_TOUCHED_PREFIX = [
-    # -- round-13 ANN-trainer rewrite riders (packed argmin, row-wise
-    # PQ encode): never driver-sampled since the rewrite --
-    "emb_kmeans_cells", "emb_pq_codes", "sim_pq_topk", "sim_ivfpq_topk",
-    "sim_ivfpq_residual_topk", "sim_ivfadc_rerank", "sim_pq_rerank",
-    "sem_dedup_kmeans", "sem_dedup_incremental", "sim_ivf_trained_topk",
-    "sim_ivf_incremental_assign", "sim_ivfpq_incremental_recode",
-    "sim_ivf_merge_occupancy", "sim_ivf_merged_topk",
-    "sim_ivf_tombstone_topk", "emb_top_pc_power", "emb_pc_outliers",
-    "emb_pq_reconstruction_mse", "emb_ivf_recall_audit",
-    "emb_kmeans_silhouette", "emb_pca_explained_variance",
-    "t_bpe_train_merges", "t_bpe_tokenize_trained",
-    # -- round-13 staged shingle-pair backbone riders --
-    "q_jaccard_knn_graph", "dedup_overlap_coeff", "t_minhash_containment",
-    "dedup_ngram_jaccard",
-    # -- round-14 optimization targets and their riders --
-    "dedup_minhash_lsh", "t_minhash_est_vs_exact", "t_lsh_recall_audit",
-    "q_label_prop_communities", "q_bfs_hops", "t_cooc_heavy_mg",
-    "t_ngram_novelty", "t_lsh_band_sweep",
-    # -- cooccurrence_edges riders (shared probe/backbone code) --
-    "q_kcore_parts", "q_degree_assortativity", "q_clustering_coefficient",
-    "q_powerlaw_degree_alpha", "q_triangle_count",
-    # -- graph maintenance families riding the pinned-edges machinery --
-    "g_labelprop_incremental", "g_labelprop_changefeed",
-    "g_labelprop_serve_merged", "g_cc_incremental", "g_cc_merge_audit",
-    "g_cc_changefeed", "g_cc_decremental", "g_cc_maintain_route",
-    "g_cc_serve_merged", "g_cc_damage_curve",
-]
+# only reach a prefix. CERTIFY_FIRST leads it with the queries whose
+# code the latest change touched, so the pass hash-certifies exactly
+# that code; the rest follow in module order. Rotate the list with
+# each change. Names and semantics are unaffected — only iteration
+# order changes.
+CERTIFY_FIRST = ["a11_upsert_cow", "t_streaming_session_totals_replay"]
 
-# Round-13 order (kept as the tail, minus the names promoted above):
-# the 17 round-13 build names first — moment measures
-# (mean/variance/covariance as power-sum counters + the 128-bit-exact
-# outlier flags), the mergeable Misra-Gries family (global / error
-# bound / route / grouped / quadratic co-occurrence / serve split),
-# the KMV serve split, the declarative second-schema views, the
-# mid-sequence router history, the sketch-routed COUNT(DISTINCT)
-# legs, the maintained histogram-quantile, and the pHash serve
-# split — then the round-12/11 blocks.
-_R13_ORDER = [
-    # -- NEW round 13: the declarative-measure proof (a SECOND view
-    # schema through the unchanged spec-driven apply_changes core),
-    # moment measures (maintained mean/variance/covariance as pure
-    # power-sum counters + the 128-bit-exact outlier presentation),
-    # and the pHash serve split completing serve-only for ALL
-    # families --
-    "v_ivm_moments_changefeed", "v_ivm_moments_outliers",
-    "ev_heavy_mg_incremental", "ev_heavy_mg_error", "ev_heavy_mg_route",
-    "ev_heavy_mg_grouped", "t_cooc_heavy_mg", "ev_heavy_mg_serve_merged",
-    "v_ivm_distinct_kmv_serve_merged",
-    "v_ivm2_incremental", "v_ivm2_changefeed", "v_ivm_route_history",
-    "v_ivm_distinct_kmv_incremental", "v_ivm_distinct_kmv_error",
-    "v_ivm_distinct_maintain_route", "q_hist_quantile_changefeed",
-    "mm_phash_serve_merged",
-    # -- NEW round 12: relational IVM — join-aggregate views under
-    # inserts AND retractions (delta-join expansion, subtractable
-    # counters, MIN/MAX re-election, router, serve-only split) --
-    "v_ivm_incremental", "v_ivm_decremental", "v_ivm_changefeed",
-    "v_ivm_maintain_route", "v_ivm_serve_merged", "v_ivm_delta_cost",
-    "v_ivm_distinct_changefeed", "v_ivm_topk_changefeed",
-    "v_ivm_rollup_changefeed",
-    # -- NEW round 12: pHash near-dup index maintenance (every
-    # near-dup family now carries a maintain path) --
-    "mm_phash_incremental", "mm_phash_decremental", "mm_phash_changefeed",
-    # -- NEW round 12: LP/k-core serve splits (every maintained
-    # family now has a deployment-shaped serve-only measurement) --
-    "g_labelprop_serve_merged", "g_kcore_serve_merged",
-    # -- NEW round 12: CC router decision + serve-only maintenance --
-    "g_cc_maintain_route",
-    "g_pagerank_serve_merged", "g_cc_serve_merged", "t_index_serve_merged",
-    # -- NEW round 12: label-prop + k-core maintenance legs --
-    "g_labelprop_incremental", "g_labelprop_changefeed",
-    "g_kcore_incremental", "g_kcore_changefeed", "g_kcore_maintain_route",
-    # -- NEW round 12: curation tombstone leg --
-    "t_curation_decremental",
-    # -- NEW round 12: event-time session windows (sequential model
-    # with eviction splits) + measurement-as-data audits --
-    "t_session_watermark_replay", "t_session_drop_audit",
-    "t_session_split_audit",
-    # -- NEW round 11: graph maintenance (delta-PageRank / incremental
-    # CC with from-scratch-union oracles), streaming-semantics replays
-    # (tumbling watermark, sliding windows), KMV A-not-B --
-    "g_pagerank_incremental", "g_pagerank_delta_frontier",
-    "g_cc_incremental", "g_cc_merge_audit",
-    "t_tumbling_watermark_replay", "t_sliding_window_replay",
-    "t_kmv_anotb",
-    # -- NEW round 11: incremental BM25 text-index maintenance
-    # (merged-equals-retrained vs t_bm25_topk's own SQL) --
-    "t_index_incremental_bm25", "t_index_rank_shift",
-    "t_index_df_drift", "t_index_delta_cost",
-    # -- NEW round 11: DCT perceptual hash (exact-integer 2D DCT-II,
-    # the second perceptual-hash family next to dHash) --
-    "mm_image_phash", "mm_phash_neardup", "mm_phash_dhash_consensus",
-    # -- NEW round 11: tombstone (retraction) maintenance closing the
-    # append-only contracts, + the measured-density auto router --
-    "g_pagerank_decremental", "g_cc_decremental",
-    "g_pagerank_maintain_route", "t_index_decremental_bm25",
-    # -- NEW round 11: personalized PageRank (the operator's seeds
-    # branch, previously un-evidenced) --
-    "q_ppr_supply",
-    # -- NEW round 11: stream-stream interval-join replay (the last
-    # Structured Streaming surface; real-engine twin pins the model) --
-    "t_stream_join_replay", "t_stream_left_join_replay",
-    "t_stream_full_join_replay",
-    # -- NEW round 11: mixed CDC changefeeds (appends + retractions in
-    # one batch) for both graph state families --
-    "g_pagerank_changefeed", "g_cc_changefeed", "t_index_changefeed_bm25",
-    # -- NEW round 11: measurement-as-data observability (the router's
-    # calibration curve; the join's per-batch drop accounting) --
-    "g_pagerank_frontier_curve", "t_stream_join_drop_audit",
-    "g_cc_damage_curve",
-    # -- changed round 11: t_bm25_topk now composes the shared
-    # operators/text_index.py builders (same plan, one formula source) --
-    "t_bm25_topk",
-    # -- NEW round 10: incremental ANN index maintenance (train on
-    # the vec_id%10<8 base, merge the rest against frozen structures) --
-    "sim_ivf_incremental_assign", "sim_ivfpq_incremental_recode",
-    "sim_ivf_merge_occupancy", "sim_ivf_merged_topk",
-    "sim_ivf_tombstone_topk", "emb_batch_drift",
-    # -- NEW: composite curation pipeline (dedup -> quality gate ->
-    # stratified sample fused over one documents scan) --
-    "t_curation_pipeline", "t_curation_funnel",
-    # -- NEW: KMV theta-sketch distinct / set-operation estimates --
-    "t_kmv_distinct_tokens", "t_kmv_union_jaccard",
-    # -- NEW: batch-vs-corpus incremental funnel; deterministic
-    # histogram-quantile sketch with its exact audit --
-    "t_curation_incremental", "q_hist_quantile_sketch",
-    # -- NEW: streaming KMV distinct monitor's batch replay --
-    "t_streaming_kmv_replay",
-    # -- changed this round: gap-sessions replay moved to the micros
-    # convention on both engines (round-9 ADVICE item 1) --
-    "t_streaming_gap_sessions_replay",
-    # -- changed: the seven graph queries share cooccurrence_edges,
-    # whose default routing is now the stats-driven auto probe
-    # (round-9 verdict item 1) --
-    "q_kcore_parts", "q_label_prop_communities", "q_bfs_hops",
-    "q_degree_assortativity", "q_clustering_coefficient",
-    "q_powerlaw_degree_alpha", "q_triangle_count",
-    # -- round-9 bench drifts, re-evidenced while re-measured
-    # (round-9 verdict item 4) --
-    "emb_pc_outliers", "t_ngram_novelty", "q_jaccard_knn_graph",
-    "t_minhash_containment",
-    # -- driver-green tail (every name below has a hash-green row in
-    # r1-r9), rough value order --
-    "q_mann_whitney_u", "t_waterfill_source_caps", "q_entity_clusters",
-    "q_lorenz_deciles", "t_hill_tail_index", "q_abc_migration",
-    "t_bootstrap_mean_ci", "t_code_like_docs", "q_theil_index",
-    "t_lsh_band_sweep", "q_ks_two_sample", "q_anova_f", "q_cramers_v",
-    "t_effective_sources", "q_naive_forecast_mape",
-    "emb_pca_explained_variance", "q_weighted_median_price",
-    "q_theil_sen_trend", "q_seasonal_strength", "t_est_jaccard_histogram",
-    "q_neyman_allocation", "t_capture_recapture_vocab",
-    "t_facility_location_select", "t_mmr_rerank", "q_kneedle_adoption",
-    "t_rbo_rankings", "q_acf_daily", "q_null_pattern_profile",
-    "q_bass_diffusion_fit", "q_bounce_rate",
-    "t_streaming_dedup_replay",
-    "t_streaming_session_totals_replay",
-    "t_streaming_band_candidates_replay",
-    "t_streaming_hll_replay",
-    "t_entropy_score",
-    "mm_png_decode_dhash", "dedup_ngram_jaccard", "dedup_minhash_lsh",
-    "q_moving_quantile", "q_pagerank_supply",
-    "t_streaming_mg_replay",
-    "t_dedup_bytes_saved", "emb_sign_hamming_topk",
-    "t_vocab_coverage_curve",
-    "t_spearman_filters", "t_js_divergence", "q_benford_first_digit",
-    "q_rfm_segmentation", "q_abc_analysis", "q_cusum_changepoint",
-    "t_ndcg_sign_bits", "emb_jl_projection",
-    "t_tokenizer_fertility", "q_herfindahl_suppliers", "q_peak_concurrency",
-    "t_hard_negative_mining", "emb_label_balance", "q_dow_seasonality",
-    "q_repeat_purchase_interval", "q_xmr_control_limits",
-    "q_ab_test_proportions", "q_cohort_ltv_curve",
-    "q_wilson_quality_ci", "t_doc_keywords",
-    "t_psi_drift", "t_classifier_prf1", "t_corpus_stopwords",
-    "emb_pq_reconstruction_mse", "q_latency_heatmap", "q_top_session_paths",
-    "q_funnel_time_to_convert", "q_price_elasticity",
-    "q_markov_attribution", "q_temporal_dq_violations", "q_ma_crossover",
-    "q_duplicate_orders", "emb_ivf_recall_audit", "q_revenue_bridge",
-    "q_xyz_variability", "q_product_adoption_curve", "t_heaps_law_fit",
-    "t_filter_threshold_sweep", "t_line_dedup_stats",
-    "emb_kmeans_silhouette", "q_churn_hazard_curve", "q_dau_wau_stickiness",
-    "t_kn_bigram_logprob", "dedup_overlap_coeff",
-    "t_minhash_est_vs_exact",
-    "q_json_extract", "emb_top_pc_power", "t_oov_rate", "sim_hybrid_rrf",
-    "t_context_pack", "q_decay_topk",
-    "t_score_calibrate", "t_stratified_sample_hash", "q_skyline_orders",
-    "t_dup_cluster_sizes", "t_unigram_logprob",
-    "emb_dim_fidelity", "t_lsh_recall_audit",
-    "t_shard_skew_audit", "q_gap_islands", "q_mode_per_group",
-    "q_cdc_compact", "q_last_touch_attribution", "t_zipf_fit",
-    "t_bigram_surprisal", "t_dataset_card",
-    "t_weighted_reservoir", "t_dp_count_release",
-    "t_curriculum_interleave", "sim_mips_norm_trick", "t_doc_pair_rouge2",
-    "t_quality_logistic", "q_watermark_lateness_audit",
-    "q_markov_transitions", "t_boilerplate_ngrams", "t_perplexity_buckets",
-    "q_new_vs_returning", "t_filter_agreement_kappa", "q_gini_revenue",
-    "q_holt_linear", "q_table_checksum", "q_partition_planner",
-    "q_gap_fill_ffill", "q_linear_interpolate", "q_rolling_zscore",
-    "q_ewma_halflife", "q_fuzzy_match_blocked",
-    "q_market_basket_lift", "q_funnel_conversion_window", "mm_scene_cuts",
-    "t_quality_terciles", "t_rare_trigram_ratio",
-    "q_scd2_intervals", "sem_dedup_incremental", "t_winsorize",
-    "t_pii_scrub", "t_pii_stats",
-    "q_sequential_pattern", "t_cross_dup_overlap", "t_robust_scale",
-    "t_doc_prefix_clusters", "q_mutual_info_terms", "t_type_token_ratio",
-    "t_udf_isolation_score", "q_range_join_binned", "q_group_regression",
-    "q_mad_anomaly", "emb_standardize", "t_dedup_survivorship",
-    "q_distribution_windows", "q_ntile_rank_frames",
-    "t_global_shuffle", "d2_ordered_changes", "sim_ivf_trained_topk",
-    "sim_ivfpq_topk", "sem_dedup_kmeans", "mm_audio_neardup",
-    "a11_upsert_cow", "sim_cosine_topk", "sim_knn_classify",
-    "sim_lsh_bucketed", "sem_dedup", "sim_ivf_topk",
-    "dedup_embedding_cosine", "mm_binary_meta", "mm_frame_sample",
-    "mm_resize", "mm_feature_extract", "mm_doc_embedding_join",
-    "mm_image_dhash", "mm_dhash_neardup", "mm_audio_fingerprint",
-    "sim_pq_topk", "sim_ivfpq_residual_topk", "sim_ivfadc_rerank",
-    "sim_pq_rerank", "dedup_incremental", "dedup_cluster_star",
-    "t_span_dedup", "q_asof_join", "q_asof_forward", "q_asof_tolerance",
-    "q_interval_join_counts", "q_pivot_returnflag",
-    "q_grouping_sets_explicit", "q_cube_events", "q_unpivot_measures",
-    "t_bpe_train_merges", "t_bpe_tokenize_trained", "t_leakage_safe_split",
-    "q_udtf_sentence_split", "q_histogram_quantile", "t_per_source_cap",
-    "s1_file_listing", "s1b_filetree_source", "s11_point_lookup",
-    "d5_subtree_restrict", "f5_multimatch_vector", "f5_multimatch_tuple",
-    "emb_centroids", "t_tfidf_top_terms", "q_variant_json",
-    "emb_kmeans_cells", "emb_pq_codes", "t_chunk_documents",
-]
-
-_SAMPLE_PRIORITY = _OPT_TOUCHED_PREFIX + [
-    n for n in _R13_ORDER if n not in set(_OPT_TOUCHED_PREFIX)
-]
-
-# guard against the round-6 duplicate-name slip (ADVICE item 3): dupes
-# are harmless at runtime (dict dedupes) but corrupt audit counts
-assert len(set(_SAMPLE_PRIORITY)) == len(_SAMPLE_PRIORITY), "duplicate in _SAMPLE_PRIORITY"
-# every promoted name must exist in the registry — a typo here would
-# silently shrink the driver's verification window
-assert all(n in REGISTRY for n in _OPT_TOUCHED_PREFIX), sorted(
-    n for n in _OPT_TOUCHED_PREFIX if n not in REGISTRY
+# a duplicate would corrupt audit counts, and a typo would silently
+# shrink the certified prefix — fail loudly at import instead
+assert len(set(CERTIFY_FIRST)) == len(CERTIFY_FIRST), "duplicate in CERTIFY_FIRST"
+assert all(n in REGISTRY for n in CERTIFY_FIRST), sorted(
+    n for n in CERTIFY_FIRST if n not in REGISTRY
 )
 
-_reordered = {n: REGISTRY[n] for n in _SAMPLE_PRIORITY if n in REGISTRY}
+_reordered = {n: REGISTRY[n] for n in CERTIFY_FIRST}
 _reordered.update({n: s for n, s in REGISTRY.items() if n not in _reordered})
 REGISTRY.clear()
 REGISTRY.update(_reordered)

@@ -439,25 +439,25 @@ SELECT coalesce(b.o_custkey, s.o_custkey) AS custkey,
        coalesce(b.total, s.total) AS total
 FROM state s FULL OUTER JOIN batch b ON s.o_custkey = b.o_custkey
 """,
-    doc="A11 upsert executed THROUGH the rename-free copy-on-write "
-    "state backend (CowStateStore): seed pre-1998 per-customer totals "
-    "as a commit, upsert the 1998+ batch as a second commit (only "
-    "touched buckets rewritten, manifest-object commit point), read "
-    "the merged state back. Oracle replays the same keyed MERGE in "
-    "SQL (data_organizer/_data_organizer.py:31-47).",
+    doc="A11 upsert executed THROUGH the copy-on-write state store "
+    "(store.StateStore): seed pre-1998 per-customer totals as a "
+    "commit, upsert the 1998+ batch as a second commit (only touched "
+    "buckets rewritten, one CRC-guarded manifest file as the commit "
+    "point, no renames), read the merged state back. Oracle replays "
+    "the same keyed MERGE in SQL (data_organizer/_data_organizer.py:31-47).",
 )
 def a11_upsert_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..blueprint import Blueprint
-    from ..cow_store import CowStateStore
+    from ..store import StateStore
 
     bp = Blueprint(
         name="CustTotals",
         required={"key": (r"(\w+)", 1)},
         optional={"description": (r"desc_(\w+)", 1)},
     )
-    store = CowStateStore(tempfile.mkdtemp(prefix="fks_cow_q_"), n_buckets=8)
+    store = StateStore(tempfile.mkdtemp(prefix="fks_cow_q_"), n_buckets=8)
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("1998-01-01").cast("timestamp")
 

@@ -1,10 +1,10 @@
 """Batch-replay oracles for the custom stateful streaming operators.
 
 Round-8 verdict item 3 (extends the round-7 HLL/Misra-Gries precedent
-in ``pipeline.py``): each `applyInPandasWithState` /
-`transformWithStateInPandas` operator in ``streaming/stateful.py``
-whose cross-batch semantics are batching-INVARIANT gets a registry
-query that reproduces, at rest and in distributed SQL on both engines,
+in ``pipeline.py``): each `applyInPandasWithState` operator in
+``streaming/stateful.py``, and the running per-key totals fold, whose
+cross-batch semantics are batching-INVARIANT gets a registry query
+that reproduces, at rest and in distributed SQL on both engines,
 exactly what the streaming op's checkpointed state/emissions converge
 to after folding every row. The driver's hash compare then gives the
 streaming family the same class of evidence the batch operators have:
@@ -210,20 +210,16 @@ SELECT event_type AS key,
          AS value_total_cents
 FROM events GROUP BY 1
 """,
-    doc="Batch replay of the v2-API running session totals "
-    "(streaming/stateful.py session_totals_v2, "
-    "transformWithStateInPandas): per-key event count and value total "
-    "are additive folds, so the final ValueState equals the at-rest "
-    "keyed aggregate for every batching. The value total is replayed "
-    "in exact integer CENTS (value has 2 decimals; round(value*100) "
-    "recovers the exact integer on both engines) because the "
-    "processor's float .sum() is addition-order-dependent at the ulp "
-    "— the replay checks the fold's semantics in arithmetic where "
-    "every grouping folds to identical bits. The pytest twin "
-    "(tests/test_streaming_replay.py) folds the same rows to exact "
-    "cents in Python; the processor itself is exercised by the "
-    "protobuf-gated v2 test in tests/test_stateful.py (gate arm runs "
-    "where the v2 runtime is absent — no silent skip). Scale shape: "
+    doc="Batch replay of running per-key session totals (event count "
+    "and value total kept in keyed streaming state): both are additive "
+    "folds, so the final state equals the at-rest keyed aggregate for "
+    "every batching. The value total is replayed in exact integer "
+    "CENTS (value has 2 decimals; round(value*100) recovers the exact "
+    "integer on both engines) because a float running .sum() is "
+    "addition-order-dependent at the ulp — the replay checks the "
+    "fold's semantics in arithmetic where every grouping folds to "
+    "identical bits. The pytest twin (tests/test_streaming_replay.py) "
+    "folds the same rows to exact cents in Python. Scale shape: "
     "one keyed partial agg, 5 output rows.",
 )
 def t_streaming_session_totals_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -119,7 +119,6 @@ class Workflow:
         exit_time: float | None = None,
         exit_file: str | None = None,
         state_store=None,
-        state_backend: str = "parquet",
     ):
         if not blueprints:
             raise ValueError("at least one blueprint is required (initializer/_initializer.py:84-87)")
@@ -128,22 +127,10 @@ class Workflow:
         self.blueprints = blueprints
         self.data_dir = data_dir or os.path.join(os.getcwd(), "workflow_data", name)
         # pluggable backend (reference Database ABC, _database.py:12-23):
-        # default versioned parquet; "cow" selects the rename-free
-        # copy-on-write store (object-store deployments); pass a
+        # the copy-on-write parquet store by default; pass a
         # JdbcStateStore instance for the JDBC-upsert deployment
         if state_store is None:
-            state_path = os.path.join(self.data_dir, "state")
-            if state_backend == "cow":
-                from ..cow_store import CowStateStore
-
-                state_store = CowStateStore(state_path)
-            elif state_backend == "parquet":
-                state_store = StateStore(state_path)
-            else:
-                raise ValueError(
-                    f"unknown state_backend {state_backend!r} "
-                    "(expected 'parquet' or 'cow')"
-                )
+            state_store = StateStore(os.path.join(self.data_dir, "state"))
         self.state = state_store
         self.watchers: list[Watcher] = []
         self.exit_time = exit_time

@@ -74,88 +74,6 @@ def streaming_dedup(grouped) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------- v2 API
-
-SESSION_TOTALS_SCHEMA = "key string, events bigint, value_total double"
-
-
-def _has_tws_deps() -> bool:
-    """transformWithStateInPandas serializes state over protobuf; this
-    container ships pyarrow/pandas but not protobuf. Gate the v2 API
-    behind the dependency probe (mirrors the multimodal codec gate)."""
-    try:
-        # probe a real submodule: `google.protobuf` alone can resolve
-        # as an empty namespace package (e.g. cloud-sdk trees on
-        # sys.path) while the actual runtime is absent
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _make_session_totals_processor():
-    """Per-key running totals on the arbitrary-state v2 API
-    (`transformWithStateInPandas`, Spark 4): ValueState holds
-    (events, value_total); TTL/timers available via the handle. The
-    v1 `applyInPandasWithState` twin is `running_count` above — same
-    semantics, pre-4.x API."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    state_schema = StructType(
-        [
-            StructField("events", LongType()),
-            StructField("value_total", DoubleType()),
-        ]
-    )
-
-    class SessionTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            self.totals = handle.getValueState("totals", state_schema)
-
-        def handleInputRows(self, key, rows, timer_values=None):
-            events, total = (
-                tuple(self.totals.get()) if self.totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                events += len(pdf)
-                total += float(pdf["value"].sum())
-            self.totals.update((events, total))
-            yield pd.DataFrame(
-                {"key": [key[0]], "events": [events], "value_total": [total]}
-            )
-
-        def close(self):
-            pass
-
-    return SessionTotalsProcessor()
-
-
-def session_totals_v2(grouped) -> DataFrame:
-    """Running per-key event count + value sum across micro-batches via
-    the v2 arbitrary-state API. Requires protobuf at runtime — callers
-    should check `_has_tws_deps()` (the engine's tests skip without it).
-    State is keyed and checkpointed exactly like v1, but v2 adds typed
-    state variables, TTL, and event/processing-time timers — the API to
-    target on Spark 4 clusters."""
-    return grouped.transformWithStateInPandas(
-        statefulProcessor=_make_session_totals_processor(),
-        outputStructType=SESSION_TOTALS_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 BAND_CANDIDATES_SCHEMA = "id_a bigint, id_b bigint, band_key string"
 
 

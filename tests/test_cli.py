@@ -72,29 +72,3 @@ def test_cli_query_subcommand(capsys):
     out = capsys.readouterr().out
     assert "q1_pricing_summary" in out and "s1_file_listing\trows-only" in out
     assert main(["query", "no_such_query"]) == 2
-
-
-def test_cli_cow_backend_from_config(spark, tmp_path):
-    """state_backend: "cow" in the JSON config runs the pipeline on the
-    copy-on-write store — manifest-object commits, no staging dirs."""
-    import os
-
-    from files_kraken_spark.cow_store import CowStateStore
-
-    root = tmp_path / "proj"
-    root.mkdir()
-    (root / "project_2_results.txt").write_text("7.25")
-    cfg = dict(
-        CFG,
-        roots=[str(root)],
-        data_dir=str(tmp_path / "wf"),
-        state_backend="cow",
-    )
-    wf = workflow_from_config(spark, cfg)
-    assert isinstance(wf.state, CowStateStore)
-    assert wf.run_once() == 1
-    row = wf.state.load(spark, wf.blueprints[0]).collect()[0]
-    assert row["result"] == 7.25
-    bdir = wf.state._dir(wf.blueprints[0].name)
-    assert any(e.startswith("manifest.v") for e in os.listdir(bdir))
-    assert not any(e.startswith("_stage") for e in os.listdir(bdir))

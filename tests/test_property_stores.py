@@ -1,7 +1,6 @@
-"""Property check: both state backends (rename-in-place StateStore and
-copy-on-write CowStateStore) implement the SAME keyed-upsert contract —
-random op sequences against a plain-dict model must agree on the final
-state, on both backends."""
+"""Property check: the state store implements the keyed-upsert
+contract — random op sequences against a plain-dict model must agree
+on the final state."""
 
 from __future__ import annotations
 
@@ -10,10 +9,8 @@ import os
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from files_kraken_spark.blueprint import Blueprint
-from files_kraken_spark.cow_store import CowStateStore
 from files_kraken_spark.operators.assemble import state_schema
 from files_kraken_spark.store import StateStore
 
@@ -63,26 +60,16 @@ _N_EX = int(os.environ.get("SPARK_GRAFT_PROP_EXAMPLES", "3"))
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(seq=SEQ)
-def test_both_backends_match_dict_model(spark, tmp_path_factory, seq):
+def test_store_matches_dict_model(spark, tmp_path_factory, seq):
     bp = _bp()
-    base = tmp_path_factory.mktemp("stores")
-    stores = [
-        StateStore(str(base / "plain"), n_buckets=4),
-        CowStateStore(str(base / "cow"), n_buckets=4),
-    ]
+    store = StateStore(str(tmp_path_factory.mktemp("stores")), n_buckets=4)
     model: dict[str, str] = {}
     for op in seq:
         if op[0] == "upsert":
-            for store in stores:
-                store.upsert_rows(spark, bp, _rows(spark, bp, op[1]))
+            store.upsert_rows(spark, bp, _rows(spark, bp, op[1]))
             model.update(dict(op[1]))
         else:
-            for store in stores:
-                store.delete(spark, bp, op[1])
+            store.delete(spark, bp, op[1])
             model.pop(op[1], None)
-    for store in stores:
-        got = {
-            r["id"]: r["description"]
-            for r in store.load(spark, bp).collect()
-        }
-        assert got == model, type(store).__name__
+    got = {r["id"]: r["description"] for r in store.load(spark, bp).collect()}
+    assert got == model

@@ -178,61 +178,6 @@ def test_streaming_incremental_dedup_pipeline(spark, tmp_path):
     assert final == [0, 1, 2, 3, 4, 12]  # 10/11 deduped away, 12 kept
 
 
-def test_transform_with_state_v2_or_documented_gate(spark, tmp_path):
-    """The v2 arbitrary-state path runs when protobuf is present;
-    otherwise the dependency gate must say so (no silent wrong answer).
-
-    Both arms are REAL assertions — no skip. pyspark 4.1.2's generated
-    StateMessage_pb2 hard-requires the protobuf>=6.33 runtime
-    (`ValidateProtobufRuntimeVersion`), which this container does not
-    ship and cannot install; in that environment the contract under
-    test is the gate itself: `_has_tws_deps()` is False and the probe
-    import fails, which is exactly what callers key off before building
-    a v2 query. The v1 `applyInPandasWithState` twin (`running_count`)
-    covers the same keyed-state semantics in `test_running_count_*`."""
-    from files_kraken_spark.streaming.stateful import (
-        _has_tws_deps,
-        session_totals_v2,
-    )
-
-    if not _has_tws_deps():
-        # gate arm: the probe must agree with reality — importing the
-        # runtime the v2 python worker needs fails in this container
-        import importlib
-
-        try:
-            importlib.import_module("google.protobuf.descriptor")
-            raise AssertionError(
-                "_has_tws_deps() is False but google.protobuf.descriptor "
-                "imports — gate is stale"
-            )
-        except ImportError:
-            pass
-        return
-
-    src = tmp_path / "in"
-    src.mkdir()
-    import json
-
-    with open(src / "b0.json", "w") as fh:
-        for i in range(6):
-            fh.write(json.dumps({"key": "k" + str(i % 2), "value": float(i)}) + "\n")
-    stream = (
-        spark.readStream.schema("key string, value double").json(str(src))
-    )
-    out = session_totals_v2(stream.groupBy("key"))
-    q = (
-        out.writeStream.format("memory")
-        .queryName("v2_totals")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = {r["key"]: r for r in spark.sql("SELECT * FROM v2_totals").collect()}
-    assert rows["k0"]["events"] == 3 and rows["k0"]["value_total"] == 0 + 2 + 4
-
-
 def test_streaming_band_candidates_across_batches(spark, tmp_path):
     """Stateful LSH candidate generation: the banded index lives in the
     checkpoint; batch 2's near-dup of a batch-1 doc must surface as a

@@ -488,21 +488,18 @@ def test_streaming_drop_duplicates_within_watermark(spark, tmp_path):
 
 
 def test_workflow_end_to_end_on_cow_backend(spark, tmp_path, bp):
-    """The copy-on-write store is a drop-in Workflow backend: the full
+    """The copy-on-write store is the Workflow's default: the full
     poll → assemble → commit → mutate → re-poll loop runs against it,
-    commits are manifest-objects (no staging renames), and state
-    matches the default backend's semantics."""
-    from files_kraken_spark.cow_store import CowStateStore
+    and commits are manifest files (no staging renames)."""
+    from files_kraken_spark.store import StateStore
 
     root = tmp_path / "watch"
     root.mkdir()
     (root / "sample_1.lane_1.fastq.gz").write_text("fq")
     (root / "sample_1.metrics.txt").write_text("50")
 
-    cow = CowStateStore(str(tmp_path / "cowstate"))
-    wf = Workflow(
-        spark, "t1", [bp], data_dir=str(tmp_path / "wfdata"), state_store=cow
-    )
+    wf = Workflow(spark, "t1", [bp], data_dir=str(tmp_path / "wfdata"))
+    assert isinstance(wf.state, StateStore)
     wf.add_watcher(str(root), timeout=0)
 
     assert wf.run_once() == 2
@@ -517,6 +514,6 @@ def test_workflow_end_to_end_on_cow_backend(spark, tmp_path, bp):
         str(root / "sample_1.lane_2.fastq.gz"),
     ]
     # commit artifacts are versioned manifests, never a staging dir
-    bdir = cow._dir(bp.name)
-    assert not any(e.startswith("_stage") for e in os.listdir(bdir))
-    assert any(e.startswith("manifest.v") for e in os.listdir(bdir))
+    assert set(os.listdir(wf.state._dir(bp.name))) == {
+        "data", "manifest.v1.json", "manifest.v2.json"
+    }
