@@ -22,9 +22,31 @@ from pyspark.sql.types import ArrayType
 
 from .blueprint import Blueprint
 from .operators.assemble import state_schema
+from .store import bucket_col, bucket_ids
+
+
+def align_to_schema(df: DataFrame, bp: Blueprint) -> DataFrame:
+    """Reconcile a stored state frame to the blueprint's CURRENT
+    schema: missing columns become typed NULLs, extras (fields removed
+    from the blueprint) are dropped, order normalized."""
+    target = state_schema(bp)
+    cols = []
+    for f in target:
+        if f.name in df.columns:
+            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
+        else:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    return df.select(*cols)
 
 
 class JdbcStateStore:
+    """Same calls as ``store.StateStore``. The buckets only name the
+    hash slices the runtime reads and commits (``load_buckets``,
+    ``overwrite(..., buckets=…)``); the table itself is not bucketed,
+    so a slice read scans the table and filters."""
+
+    n_buckets = 32
+
     def __init__(
         self,
         spark: SparkSession,
@@ -35,6 +57,9 @@ class JdbcStateStore:
         self.url = url
         self.driver = driver
         self._props = {"driver": driver}
+
+    def bucket_ids(self, ids: DataFrame) -> list[int]:
+        return bucket_ids(ids, self.n_buckets)
 
     # ----------------------------------------------------------- codecs
 
@@ -152,8 +177,15 @@ class JdbcStateStore:
     # ------------------------------------------------------------ reads
 
     def load(self, spark: SparkSession, bp: Blueprint) -> DataFrame:
-        """S14 — full scan; empty frame with the blueprint schema when
-        the table doesn't exist yet (reference empty-DB tolerance).
+        """S14 — full scan (see ``load_buckets``)."""
+        return self.load_buckets(spark, bp, None)
+
+    def load_buckets(
+        self, spark: SparkSession, bp: Blueprint, buckets: list[int] | None
+    ) -> DataFrame:
+        """The rows of ``buckets`` (every row when None); empty frame
+        with the blueprint schema when the table doesn't exist yet
+        (reference empty-DB tolerance).
 
         Crash recovery: if the live table is missing but swap leftovers
         exist, adopt the newest PROVEN-complete one. ``_STAGE`` is only
@@ -167,8 +199,6 @@ class JdbcStateStore:
         ``_OLD`` means the swap crashed after parking but the stage was
         already promoted or lost; the parked pre-swap state is the best
         committed state, adopt it."""
-        from .store import align_to_schema
-
         table = self._table(bp)
         if not self._table_exists(table):
             stage, old = table + "_STAGE", table + "_OLD"
@@ -182,7 +212,10 @@ class JdbcStateStore:
         if not self._table_exists(table):
             return spark.createDataFrame([], state_schema(bp))
         raw = spark.read.jdbc(self.url, self._table(bp), properties=self._props)
-        return align_to_schema(self._decode(raw, bp), bp)
+        out = align_to_schema(self._decode(raw, bp), bp)
+        if buckets is None:
+            return out
+        return out.filter(bucket_col(self.n_buckets).isin(list(buckets)))
 
     def get(self, spark: SparkSession, bp: Blueprint, entity_id: str) -> DataFrame:
         """S11 — point lookup (both key parts — the reference's
@@ -195,15 +228,18 @@ class JdbcStateStore:
     # ----------------------------------------------------------- writes
 
     def overwrite(
-        self, bp: Blueprint, df: DataFrame, touched_ids: DataFrame | None = None
+        self, bp: Blueprint, df: DataFrame, buckets: list[int] | None = None
     ) -> None:
-        """Commit the new state. With ``touched_ids`` and an existing
-        table, only the touched entities are MERGEd (the pipeline never
-        drops state rows — deletes NULL fields — so merging the touched
-        subset equals the full replace); otherwise full-state replace."""
-        if touched_ids is not None and self._table_exists(self._table(bp)):
-            batch = df.join(touched_ids.select("id").distinct(), "id", "left_semi")
-            self.merge_upsert(bp, batch)
+        """Commit the new state. With ``buckets`` and an existing table,
+        only ``df``'s rows in those buckets are MERGEd (the pipeline
+        never drops state rows — deletes NULL fields — so merging the
+        touched slice equals the full replace); otherwise full-state
+        replace."""
+        if buckets is not None and self._table_exists(self._table(bp)):
+            if buckets:
+                self.merge_upsert(
+                    bp, df.filter(bucket_col(self.n_buckets).isin(list(buckets)))
+                )
             return
         # stage-first: ``df`` is lazy and commonly DERIVES from this
         # store's own table (assemble merges batch into load()); a

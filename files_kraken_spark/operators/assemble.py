@@ -336,14 +336,20 @@ def assemble(
     state: DataFrame,
     bp: Blueprint,
     content_roots: list[str] | None = None,
+    matched: DataFrame | None = None,
 ) -> DataFrame:
     """Full batch assembly for one blueprint: match → aggregate →
-    merge with state → parser pass. Returns the new state DataFrame.
+    merge with state → parser pass. Returns the new state DataFrame:
+    ``state``'s rows merged with the batch's entities.
 
+    ``state`` may be any slice of the table that holds every entity the
+    batch touches (the runtime passes just the touched buckets).
     ``content_roots``: watch roots for content-mode parsers — lets the
     binaryFile content join scan exactly the watched subtrees instead
-    of deriving a prefix from the batch."""
-    matched = match_batch(changes, bp)
+    of deriving a prefix from the batch. ``matched``: the caller's
+    ``match_batch(changes, bp)``, when it already built one."""
+    if matched is None:
+        matched = match_batch(changes, bp)
     agg = aggregate_batch(matched, bp)
     created = agg.filter(F.col("change") == "created")
     deleted = agg.filter(F.col("change") == "deleted")

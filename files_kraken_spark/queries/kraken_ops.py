@@ -447,6 +447,7 @@ FROM state s FULL OUTER JOIN batch b ON s.o_custkey = b.o_custkey
     "the same keyed MERGE in SQL (data_organizer/_data_organizer.py:31-47).",
 )
 def a11_upsert_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import shutil
     import tempfile
 
     from ..blueprint import Blueprint
@@ -457,7 +458,8 @@ def a11_upsert_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
         required={"key": (r"(\w+)", 1)},
         optional={"description": (r"desc_(\w+)", 1)},
     )
-    store = StateStore(tempfile.mkdtemp(prefix="fks_cow_q_"), n_buckets=8)
+    root = tempfile.mkdtemp(prefix="fks_cow_q_")
+    store = StateStore(root, n_buckets=8)
     orders = load_table(spark, sf_dir, "orders")
     cutoff = F.lit("1998-01-01").cast("timestamp")
 
@@ -477,11 +479,16 @@ def a11_upsert_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(F.round(F.sum("o_totalprice"), 2).alias("total"))
     )
-    store.overwrite(bp, to_state(totals(F.col("o_orderdate") < cutoff)))
-    store.upsert_rows(
-        spark, bp, to_state(totals(F.col("o_orderdate") >= cutoff))
-    )
-    return store.load(spark, bp).select(
-        F.col("id").cast("bigint").alias("custkey"),
-        F.col("description").cast("double").alias("total"),
-    )
+    try:
+        store.overwrite(bp, to_state(totals(F.col("o_orderdate") < cutoff)))
+        store.upsert_rows(
+            spark, bp, to_state(totals(F.col("o_orderdate") >= cutoff))
+        )
+        # materialized before the store dir goes: the frame would
+        # otherwise read the removed files lazily
+        return store.load(spark, bp).select(
+            F.col("id").cast("bigint").alias("custkey"),
+            F.col("description").cast("double").alias("total"),
+        ).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)

@@ -8,12 +8,15 @@ table per blueprint, committed as a copy-on-write manifest log:
     <root>/<blueprint>/manifest.v<N>.json    {"version": N,
                                               "buckets": {"k": M}, "crc": …}
 
-- **Commits are incremental.** Only buckets whose ids appear in the
-  batch are rewritten (the reference updates only touched entities,
-  ``data_organizer/_data_organizer.py:43-47``); a full-state overwrite
-  per micro-batch would be O(state) write amplification per tick.
-  Untouched buckets keep their (version, path) in the new manifest, so
-  one immutable data dir is shared by every commit that references it.
+- **Reads and commits are per bucket.** A change tick reads only the
+  buckets its entity ids hash into (``load_buckets``) and rewrites only
+  those (``overwrite(..., buckets=…)``), as the reference updates only
+  touched entities (``data_organizer/_data_organizer.py:43-47``) and
+  Structured Streaming's stateful operators read state only for the
+  keys in the micro-batch; reading or rewriting the whole table per
+  tick would cost O(state). Untouched buckets keep their (version,
+  path) in the new manifest, so one immutable data dir is shared by
+  every commit that references it. ``load`` is the full scan.
 - **Data is written once, to its final location.** One ``partitionBy``
   write lands the touched buckets under ``data/v=<N>/``; the store
   never moves a file. (Inside that dir Spark's FileOutputCommitter
@@ -50,7 +53,8 @@ import os
 import re
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blueprint import Blueprint
@@ -59,18 +63,19 @@ from .operators.assemble import state_schema
 _MANIFEST_RE = re.compile(r"^manifest\.v(\d+)\.json$")
 
 
-def align_to_schema(df: DataFrame, bp: Blueprint) -> DataFrame:
-    """Reconcile a stored state frame to the blueprint's CURRENT
-    schema: missing columns become typed NULLs, extras (fields removed
-    from the blueprint) are dropped, order normalized."""
-    target = state_schema(bp)
-    cols = []
-    for f in target:
-        if f.name in df.columns:
-            cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    return df.select(*cols)
+def bucket_col(n_buckets: int) -> Column:
+    """Each row's state bucket: ``pmod(xxhash64(id), n_buckets)``."""
+    return F.pmod(F.xxhash64(F.col("id")), F.lit(n_buckets)).cast("int")
+
+
+def bucket_ids(ids: DataFrame, n_buckets: int) -> list[int]:
+    """The sorted distinct buckets of the ``id`` column of ``ids``.
+
+    One small int per row, deduplicated on the driver: over a
+    driver-local batch (an Arrow-backed frame) the projection folds
+    into the local relation and runs no Spark job, where a
+    ``distinct()`` would add a shuffle and two jobs."""
+    return sorted({r[0] for r in ids.select(bucket_col(n_buckets)).collect()})
 
 
 def _payload_crc(version: int, buckets: dict) -> str:
@@ -106,8 +111,8 @@ class StateStore:
     def _bucket_path(self, blueprint_name: str, k, v) -> str:
         return os.path.join(self._dir(blueprint_name), f"data/v={v}", f"__b={k}")
 
-    def _bucket_col(self):
-        return F.pmod(F.xxhash64(F.col("id")), F.lit(self.n_buckets)).cast("int")
+    def _bucket_col(self) -> Column:
+        return bucket_col(self.n_buckets)
 
     def _manifest_versions(self, blueprint_name: str) -> list[int]:
         """All manifest version numbers on disk, descending — including
@@ -174,55 +179,75 @@ class StateStore:
 
     # ------------------------------------------------------------- reads
 
-    def _read(self, spark: SparkSession, bp: Blueprint, man: dict | None) -> DataFrame:
-        """The table as of manifest ``man``, aligned to ``bp``'s schema.
+    def bucket_ids(self, ids: DataFrame) -> list[int]:
+        """The buckets ``ids``' rows hash into (see ``bucket_ids``)."""
+        return bucket_ids(ids, self.n_buckets)
+
+    def _read(
+        self,
+        spark: SparkSession,
+        bp: Blueprint,
+        man: dict | None,
+        buckets: list[int] | None = None,
+    ) -> DataFrame:
+        """The table as of manifest ``man`` — only ``buckets`` of it
+        when given — in ``bp``'s schema. Buckets the manifest does not
+        hold are empty and read nothing.
 
         Schema evolution: a table written before the blueprint gained a
         field comes back with the new columns as NULL (the reference's
         document store was schemaless, so old records simply lacked the
-        key — NULL is the columnar equivalent)."""
-        if not man or not man["buckets"]:
-            raw = spark.createDataFrame([], state_schema(bp))
-        else:
-            paths = [
-                self._bucket_path(bp.name, k, bv) for k, bv in man["buckets"].items()
-            ]
-            raw = spark.read.option("mergeSchema", "true").parquet(*paths)
-        return align_to_schema(raw, bp)
+        key — NULL is the columnar equivalent), and columns of fields
+        the blueprint dropped are not read. The reader is handed the
+        blueprint's schema, so no Spark job infers or merges the file
+        schemas."""
+        held = man["buckets"] if man else {}
+        keys = held if buckets is None else [str(k) for k in buckets if str(k) in held]
+        if not keys:
+            return spark.createDataFrame([], state_schema(bp))
+        paths = [self._bucket_path(bp.name, k, held[k]) for k in keys]
+        return spark.read.schema(state_schema(bp)).parquet(*paths)
+
+    def load_buckets(
+        self, spark: SparkSession, bp: Blueprint, buckets: list[int] | None
+    ) -> DataFrame:
+        """The current rows of ``buckets`` (every bucket when None) —
+        manifest-level partition pruning: only those bucket dirs are
+        handed to the reader."""
+        return self._read(spark, bp, self._read_manifest(bp.name), buckets)
 
     def load(self, spark: SparkSession, bp: Blueprint) -> DataFrame:
         """S14 — full scan of one blueprint's table (empty if absent)."""
-        return self._read(spark, bp, self._read_manifest(bp.name))
+        return self.load_buckets(spark, bp, None)
+
+    def _id_buckets(self, spark: SparkSession, ids: list[str]) -> list[int]:
+        """``bucket_ids`` of a driver-side id list (no Spark job)."""
+        local = spark.createDataFrame(pa.table({"id": pa.array(ids, pa.string())}))
+        return self.bucket_ids(local)
 
     def get(self, spark: SparkSession, bp: Blueprint, entity_id: str) -> DataFrame:
         """S11 — point lookup by (blueprint, id). Only the id's bucket
-        is scanned (manifest-level partition pruning)."""
+        is scanned."""
         pred = (F.col("blueprint") == bp.name) & (F.col("id") == entity_id)
-        man = self._read_manifest(bp.name)
-        if not man or not man["buckets"]:
-            return self._read(spark, bp, None).filter(pred)
-        one = spark.createDataFrame([(entity_id,)], "id string")
-        k = one.select(self._bucket_col().alias("__b")).first()[0]
-        bv = man["buckets"].get(str(k))
-        if bv is None:
-            return self._read(spark, bp, None).filter(pred)
-        raw = spark.read.parquet(self._bucket_path(bp.name, k, bv))
-        return align_to_schema(raw, bp).filter(pred)
+        return self.load_buckets(spark, bp, self._id_buckets(spark, [entity_id])).filter(pred)
 
     # ------------------------------------------------------------ writes
 
     def overwrite(
-        self, bp: Blueprint, df: DataFrame, touched_ids: DataFrame | None = None
+        self, bp: Blueprint, df: DataFrame, buckets: list[int] | None = None
     ) -> int:
         """A11 — commit a new state version (single-writer).
 
-        With ``touched_ids`` (the batch's entity ids), only the buckets
-        those ids hash into are rewritten — rows of ``df`` outside the
-        touched buckets are identical to the stored state by
-        construction (the merge only changes batch entities), so their
-        buckets keep their old version. Without it, every bucket is
-        rewritten (bootstrap / reindex path)."""
+        With ``buckets``, only those buckets are replaced: each becomes
+        ``df``'s rows that hash into it (the bucket leaves the manifest
+        when none do), and every other bucket keeps its old version.
+        ``df``'s rows outside ``buckets`` are ignored. Without it, every
+        bucket is rewritten from ``df`` (bootstrap / reindex path).
+        An empty ``buckets`` commits nothing and returns the current
+        version (0 before the first commit)."""
         man = self._read_manifest(bp.name)
+        if buckets is not None and not buckets:
+            return man["version"] if man else 0
         prev_buckets = (
             {int(k): int(bv) for k, bv in man["buckets"].items()} if man else {}
         )
@@ -230,18 +255,9 @@ class StateStore:
         bdir = self._dir(bp.name)
         os.makedirs(bdir, exist_ok=True)
 
-        touched: list[int] | None = None
         out = df.withColumn("__b", self._bucket_col())
-        if touched_ids is not None and prev_buckets:
-            touched = sorted(
-                r[0]
-                for r in touched_ids.select(
-                    self._bucket_col().alias("__b")
-                ).distinct().collect()  # ≤ n_buckets small ints — driver-safe
-            )
-            if not touched:
-                return man["version"]
-            out = out.filter(F.col("__b").isin(touched))
+        if buckets is not None:
+            out = out.filter(F.col("__b").isin(list(buckets)))
 
         data_dir = os.path.join(bdir, f"data/v={v}")
         out.write.mode("overwrite").option(
@@ -251,12 +267,12 @@ class StateStore:
             int(e.split("=", 1)[1]) for e in os.listdir(data_dir) if e.startswith("__b=")
         }
 
-        if touched is None:
+        if buckets is None:
             # full rewrite: buckets with no rows in df are now empty
             new_buckets = {k: v for k in written}
         else:
             new_buckets = dict(prev_buckets)
-            for k in touched:
+            for k in buckets:
                 if k in written:
                     new_buckets[k] = v
                 else:
@@ -277,20 +293,17 @@ class StateStore:
 
     def upsert_rows(self, spark: SparkSession, bp: Blueprint, rows: DataFrame) -> int:
         """S10/S12 — insert-or-replace whole rows by id (utility path;
-        the pipeline itself uses assemble's merge)."""
-        cur = self.load(spark, bp)
-        kept = cur.join(rows.select("id"), "id", "left_anti")
-        return self.overwrite(
-            bp, kept.unionByName(rows), touched_ids=rows.select("id")
-        )
+        the pipeline itself uses assemble's merge). Reads and rewrites
+        only the buckets ``rows`` hash into."""
+        buckets = self.bucket_ids(rows)
+        kept = self.load_buckets(spark, bp, buckets).join(rows.select("id"), "id", "left_anti")
+        return self.overwrite(bp, kept.unionByName(rows), buckets=buckets)
 
     def delete(self, spark: SparkSession, bp: Blueprint, entity_id: str) -> int:
-        """S13 — remove one entity (rewrites only its bucket)."""
-        cur = self.load(spark, bp)
-        touched = spark.createDataFrame([(entity_id,)], "id string")
-        return self.overwrite(
-            bp, cur.filter(F.col("id") != entity_id), touched_ids=touched
-        )
+        """S13 — remove one entity (reads and rewrites only its bucket)."""
+        buckets = self._id_buckets(spark, [entity_id])
+        cur = self.load_buckets(spark, bp, buckets)
+        return self.overwrite(bp, cur.filter(F.col("id") != entity_id), buckets=buckets)
 
     def clear(self, bp: Blueprint) -> None:
         shutil.rmtree(self._dir(bp.name), ignore_errors=True)

@@ -5,29 +5,37 @@ snapshot, and pushes ``Changes`` through an event bus into the
 builder (``monitoring/_monitoring.py:270-304``). Here each poll tick
 is one micro-batch: scan → diff (created AND deleted — Spark's own
 file stream source only sees additions) → per-blueprint assembly →
-state-table commit → snapshot commit. The scan, the diff and the
-snapshot commit run on the driver over Arrow tables, as Structured
-Streaming's file source keeps its listing and seen-files log on the
-driver: an idle tick runs no Spark job, and only a non-empty change
-set becomes a DataFrame (one local relation for all watchers).
+state-table commit → audit append → snapshot commit. The scan, the
+diff, the audit append and the snapshot commit run on the driver over
+Arrow tables, as Structured Streaming's file source keeps its listing
+and seen-files log on the driver: an idle tick runs no Spark job, and
+only a non-empty change set becomes a DataFrame (one local relation
+for all watchers). A change tick costs O(batch), not O(state): each
+blueprint matches the batch once, and only the state buckets the
+matched entity ids hash into are read, merged and rewritten.
 ``Trigger.AvailableNow`` semantics = ``run_once``;
 ``processingTime`` = ``run(poll_interval=…)``; the reference's
 ``exit_time``/``exit_file`` stop conditions are preserved (R2).
 
 ``start_stream`` additionally wires a true Structured Streaming file
-source (created-side only) with ``foreachBatch`` running the same
-assembly — the deletion-reconciliation stays with the poll loop, the
-single owner of the state table (SURVEY §7.4).
+source (created-side only) with ``foreachBatch`` handing each batch,
+as Arrow, to the same assembly and audit path — the
+deletion-reconciliation stays with the poll loop, the single owner of
+the state table (SURVEY §7.4).
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from typing import Callable
 
 import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -153,25 +161,40 @@ class Workflow:
 
     def process_changes(self, changes: DataFrame) -> None:
         """R3 — the 'event bus': every blueprint consumes the batch;
-        each assembly commits its own state version. The batch is also
-        appended to the audit log (R4 — the reference's timestamped
-        change report, ``monitoring/_monitoring.py:217-227``, as a
-        queryable table instead of console prints)."""
-        self._audit(changes)
+        each assembly commits its own state version.
+
+        Per blueprint the batch is matched once; the buckets its entity
+        ids hash into are the only state read (``load_buckets``), merged
+        (``assemble`` over that slice) and rewritten (``overwrite`` with
+        the same buckets) — the reference's per-entity update
+        (``data_organizer/_data_organizer.py:43-47``). A blueprint the
+        batch does not touch reads and commits nothing."""
         roots = [r for w in self.watchers for r in w.roots] or None
         for bp in self.blueprints:
-            cur = self.state.load(self.spark, bp)
-            new = assemble(changes, cur, bp, content_roots=roots)
-            # incremental commit: only buckets holding this batch's
-            # entities are rewritten (S12 / reference per-entity update)
-            touched = match_batch(changes, bp).select("id").distinct()
-            self.state.overwrite(bp, new, touched_ids=touched)
+            matched = match_batch(changes, bp)
+            buckets = self.state.bucket_ids(matched)
+            if not buckets:
+                continue
+            cur = self.state.load_buckets(self.spark, bp, buckets)
+            new = assemble(changes, cur, bp, content_roots=roots, matched=matched)
+            self.state.overwrite(bp, new, buckets=buckets)
 
-    def _audit(self, changes: DataFrame) -> None:
+    def _audit(self, changes: pa.Table) -> None:
+        """R4 — append one processed batch to the audit log (the
+        reference's timestamped change report,
+        ``monitoring/_monitoring.py:217-227``, as a queryable table
+        instead of console prints). Written on the driver as one
+        parquet file under a dot-prefixed name, which readers skip,
+        then renamed into place, so a torn write is never read."""
         audit_dir = os.path.join(self.data_dir, "audit")
-        changes.withColumn("batch_ts", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(audit_dir)
+        os.makedirs(audit_dir, exist_ok=True)
+        ts = pa.array(
+            [datetime.now(timezone.utc)] * changes.num_rows, pa.timestamp("us", tz="UTC")
+        )
+        name = f"batch-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(audit_dir, "." + name)
+        pq.write_table(changes.append_column("batch_ts", ts), tmp, compression="zstd")
+        os.replace(tmp, os.path.join(audit_dir, name))
 
     def conflicts(self) -> DataFrame:
         """All quarantined entities across blueprints — the engine's
@@ -195,13 +218,13 @@ class Workflow:
 
     def audit_log(self) -> DataFrame:
         """R4 — full change history: (path, name, change, batch_ts)."""
-        audit_dir = os.path.join(self.data_dir, "audit")
+        schema = "path string, name string, change string, batch_ts timestamp"
         try:
-            return self.spark.read.parquet(audit_dir)
-        except Exception:
-            return self.spark.createDataFrame(
-                [], "path string, name string, change string, batch_ts timestamp"
+            return self.spark.read.schema(schema).parquet(
+                os.path.join(self.data_dir, "audit")
             )
+        except AnalysisException:  # no batch processed yet
+            return self.spark.createDataFrame([], schema)
 
     def run_once(self, force_reindex: bool = False, respect_timeouts: bool = False) -> int:
         """One micro-batch across all watchers (AvailableNow semantics;
@@ -229,6 +252,7 @@ class Workflow:
         table = pa.concat_tables([pb.changes for pb in polled])  # D4
         if table.num_rows:
             self.process_changes(self.spark.createDataFrame(table))
+            self._audit(table)
         # snapshots advance only after every blueprint committed —
         # a failure above re-polls the same diff next tick
         for pb in polled:
@@ -266,9 +290,11 @@ class Workflow:
 
     def start_stream(self, root: str, checkpoint_dir: str, glob: str = "*"):
         """True Structured Streaming ingest for the created side: file
-        source discovers new files; ``foreachBatch`` funnels them into
-        the same assembly. Deletions still come from the poll loop —
-        one owner for the state table."""
+        source discovers new files; ``foreachBatch`` collects each batch
+        of paths as Arrow (the file source already holds it on the
+        driver) and hands it to the same assembly and audit path as
+        ``run_once``. Deletions still come from the poll loop — one
+        owner for the state table."""
         stream = (
             self.spark.readStream.format("binaryFile")
             .schema(
@@ -290,8 +316,10 @@ class Workflow:
                 plain.alias("path"),
                 F.element_at(F.split(plain, "/"), -1).alias("name"),
                 F.lit("created").alias("change"),
-            )
-            self.process_changes(changes)
+            ).toArrow()
+            if changes.num_rows:
+                self.process_changes(self.spark.createDataFrame(changes))
+                self._audit(changes)
 
         return (
             stream.writeStream.foreachBatch(_on_batch)

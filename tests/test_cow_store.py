@@ -1,7 +1,8 @@
 """StateStore's copy-on-write commit path: CRUD through manifest
 commits, buckets shared between commits, time travel across an
-incremental commit, and the change feed of an incremental commit.
-Crash atomicity, retention and the rest live in tests/test_store.py."""
+incremental (bucket) commit, and the change feed of an incremental
+commit. Crash atomicity, retention and the rest live in
+tests/test_store.py."""
 
 from __future__ import annotations
 
@@ -61,7 +62,7 @@ def test_incremental_commit_shares_untouched_buckets(spark, tmp_path, bp):
         .filter(F.col("id") != "id0")
         .unionByName(batch)
     )
-    store.overwrite(bp, merged, touched_ids=batch.select("id"))
+    store.overwrite(bp, merged, buckets=store.bucket_ids(batch))
     man2 = store._read_manifest(bp.name)
 
     moved = {k for k in man1["buckets"] if man2["buckets"].get(k) != man1["buckets"][k]}
@@ -79,7 +80,7 @@ def test_time_travel_previous_version(spark, tmp_path, bp):
     merged = (
         store.load(spark, bp).filter(F.col("id") != "a").unionByName(batch)
     )
-    store.overwrite(bp, merged, touched_ids=batch.select("id"))
+    store.overwrite(bp, merged, buckets=store.bucket_ids(batch))
 
     prev = {r["id"]: r["description"] for r in store.load_version(spark, bp, 1).collect()}
     cur = {r["id"]: r["description"] for r in store.load_version(spark, bp, 2).collect()}
@@ -96,8 +97,7 @@ def test_change_data_feed(spark, tmp_path, bp):
         .filter(~F.col("id").isin("a", "b"))
         .unionByName(batch)
     )
-    store.overwrite(bp, merged, touched_ids=spark.createDataFrame(
-        [("a",), ("b",), ("c",)], "id string"
-    ))
+    touched = spark.createDataFrame([("a",), ("b",), ("c",)], "id string")
+    store.overwrite(bp, merged, buckets=store.bucket_ids(touched))
     got = {r["id"]: r["change"] for r in store.changes(spark, bp).collect()}
     assert got == {"a": "updated", "b": "deleted", "c": "inserted"}

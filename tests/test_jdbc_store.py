@@ -111,7 +111,7 @@ def test_full_replace_derived_from_own_load_keeps_state(spark, store, bp):
     merged = store.load(spark, bp).unionByName(
         _state_rows(spark, bp, [("3", ["z"])])
     )
-    store.overwrite(bp, merged)  # full replace, no touched_ids
+    store.overwrite(bp, merged)  # full replace, no buckets
     got = {r["id"]: r["fastqs"] for r in store.load(spark, bp).collect()}
     assert got == {"1": ["a"], "2": ["x"], "3": ["z"]}
 
@@ -134,7 +134,7 @@ def test_merge_after_blueprint_gains_field(spark, store, bp):
     batch = spark.createDataFrame(
         [(evolved.name, "2", "2", ["y"], "me", [])], state_schema(evolved)
     )
-    store.overwrite(evolved, batch, touched_ids=batch.select("id"))
+    store.overwrite(evolved, batch, buckets=store.bucket_ids(batch))
     got = {r["id"]: (r["fastqs"], r["owner"])
            for r in store.load(spark, evolved).collect()}
     assert got == {"1": (["a"], None), "2": (["y"], "me")}

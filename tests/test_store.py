@@ -34,8 +34,8 @@ def _state(spark, store, bp):
     return {r["id"]: r["description"] for r in store.load(spark, bp).collect()}
 
 
-def _ids(spark, *ids):
-    return spark.createDataFrame([(i,) for i in ids], "id string")
+def _buckets(spark, store, *ids):
+    return store._id_buckets(spark, list(ids))
 
 
 def test_schema_evolution_new_field_loads_null(spark, tmp_path, bp):
@@ -102,8 +102,9 @@ def test_incremental_commit_rewrites_only_touched_bucket(spark, tmp_path, bp):
     assert len(man1["buckets"]) > 1  # 32 ids spread over several buckets
 
     batch = _rows(spark, bp, [("id0", "UPDATED")])
-    merged = store.load(spark, bp).filter(F.col("id") != "id0").unionByName(batch)
-    store.overwrite(bp, merged, touched_ids=batch.select("id"))
+    buckets = store.bucket_ids(batch)
+    merged = store.load_buckets(spark, bp, buckets).filter(F.col("id") != "id0")
+    store.overwrite(bp, merged.unionByName(batch), buckets=buckets)
     man2 = store._read_manifest(bp.name)
 
     assert man2["version"] == man1["version"] + 1
@@ -122,7 +123,7 @@ def test_incremental_commit_updates_values(spark, tmp_path, bp):
     store = StateStore(str(tmp_path / "state"), n_buckets=8)
     store.overwrite(bp, _rows(spark, bp, [("a", "one"), ("b", "two"), ("c", "three")]))
     new = _rows(spark, bp, [("a", "ONE"), ("b", "two"), ("c", "three")])
-    store.overwrite(bp, new, touched_ids=_ids(spark, "a"))
+    store.overwrite(bp, new, buckets=_buckets(spark, store, "a"))
     assert _state(spark, store, bp) == {"a": "ONE", "b": "two", "c": "three"}
 
 
@@ -135,7 +136,7 @@ def test_incremental_commit_prunes_superseded_buckets(spark, tmp_path, bp):
     for rid in ("id0", "id1", "id0"):
         batch = _rows(spark, bp, [(rid, "UPDATED")])
         merged = store.load(spark, bp).filter(F.col("id") != rid).unionByName(batch)
-        store.overwrite(bp, merged, touched_ids=batch.select("id"))
+        store.overwrite(bp, merged, buckets=store.bucket_ids(batch))
 
     referenced = {
         (int(bv), int(k))
@@ -203,14 +204,14 @@ def test_time_travel_previous_version(spark, tmp_path, bp):
     store = StateStore(str(tmp_path / "state"), n_buckets=4)
     v1 = store.overwrite(bp, _rows(spark, bp, [("a", "one")]))
     v2 = store.overwrite(
-        bp, _rows(spark, bp, [("a", "ONE"), ("b", "two")]), touched_ids=_ids(spark, "a", "b")
+        bp, _rows(spark, bp, [("a", "ONE"), ("b", "two")]), buckets=_buckets(spark, store, "a", "b")
     )
     assert _state(spark, store, bp) == {"a": "ONE", "b": "two"}
     prev = {r["id"]: r["description"] for r in store.load_version(spark, bp, v1).collect()}
     assert prev == {"a": "one"}
     # a third commit rolls the retention window forward
     store.overwrite(
-        bp, _rows(spark, bp, [("a", "ONE"), ("b", "TWO")]), touched_ids=_ids(spark, "b")
+        bp, _rows(spark, bp, [("a", "ONE"), ("b", "TWO")]), buckets=_buckets(spark, store, "b")
     )
     assert store.load_version(spark, bp, v2).count() == 2
     with pytest.raises(ValueError):
@@ -230,7 +231,7 @@ def test_change_data_feed(spark, tmp_path, bp):
     # incremental: update d, delete b, insert e
     batch = _rows(spark, bp, [("d", "FOUR"), ("e", "five")])
     merged = store.load(spark, bp).filter(F.col("id") == "a").unionByName(batch)
-    store.overwrite(bp, merged, touched_ids=_ids(spark, "b", "d", "e"))
+    store.overwrite(bp, merged, buckets=_buckets(spark, store, "b", "d", "e"))
     got = {r["id"]: r["change"] for r in store.changes(spark, bp).collect()}
     assert got == {"d": "updated", "b": "deleted", "e": "inserted"}
 
@@ -245,7 +246,7 @@ def test_change_feed_skips_torn_commit(spark, tmp_path, bp):
 
     batch = _rows(spark, bp, [("a", "ONE"), ("c", "three")])
     merged = store.load(spark, bp).filter(~F.col("id").isin("a", "b")).unionByName(batch)
-    assert store.overwrite(bp, merged, touched_ids=_ids(spark, "a", "b", "c")) == 3
+    assert store.overwrite(bp, merged, buckets=_buckets(spark, store, "a", "b", "c")) == 3
     got = {r["id"]: r["change"] for r in store.changes(spark, bp).collect()}
     assert got == {"a": "updated", "b": "deleted", "c": "inserted"}
 

@@ -153,6 +153,32 @@ def test_audit_log_records_changes(spark, tmp_path, bp):
     assert all(r["batch_ts"] is not None for r in log)
 
 
+def test_audit_log_reads_spark_written_and_driver_written_files(spark, tmp_path, bp):
+    """An audit dir that Spark appended to (INT96 ``batch_ts``, snappy,
+    ``_SUCCESS`` and ``.crc`` side files) still reads once the driver
+    appends its own files; an unfinished dot-prefixed file is skipped."""
+    root = tmp_path / "watch"
+    root.mkdir()
+    wf = Workflow(spark, "t7b", [bp], data_dir=str(tmp_path / "wfdata"))
+    wf.add_watcher(str(root))
+    audit_dir = tmp_path / "wfdata" / "audit"
+    spark.createDataFrame(
+        [("/old/sample_1.lane_1.fastq.gz", "sample_1.lane_1.fastq.gz", "created")],
+        "path string, name string, change string",
+    ).withColumn("batch_ts", F.current_timestamp()).write.mode("append").parquet(
+        str(audit_dir)
+    )
+    (root / "sample_2.lane_1.fastq.gz").write_text("fq")
+    wf.run_once()
+    (audit_dir / ".batch-torn.parquet").write_bytes(b"PAR1 torn")
+    log = wf.audit_log().collect()
+    assert sorted(r["name"] for r in log) == [
+        "sample_1.lane_1.fastq.gz",
+        "sample_2.lane_1.fastq.gz",
+    ]
+    assert all(r["batch_ts"] is not None for r in log)
+
+
 def test_streaming_drop_duplicates_with_watermark(spark, tmp_path):
     """Built-in streaming dedup: dropDuplicates over a watermarked
     stream removes cross-batch repeats within the watermark horizon."""
