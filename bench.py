@@ -104,6 +104,38 @@ EXTRA = [
 ]
 
 
+def min_noop_runs(spark, spec, sf_dir: str, runs: int) -> list[float]:
+    """``runs`` timed runs of one registry query; callers report the min
+    (the steady-state cost) and max/min as the spread. Each run clears
+    the cache, so operators that persist internal frames (LSH) get no
+    warm start from the previous run, and materializes through the noop
+    sink, which evaluates EVERY column (count() would let Catalyst prune
+    projections and under-measure)."""
+    out = []
+    for _ in range(runs):
+        spark.catalog.clearCache()
+        t0 = time.time()
+        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        out.append(round(time.time() - t0, 3))
+    return out
+
+
+def control(spark, sf_dir: str, name: str = "q1_pricing_summary") -> float:
+    """Load sentinel: one clean-cache run of a fixed query. Timed at the
+    start and end of a block — drift between the two reveals a box that
+    got loaded (or UNloaded: a contended session start) mid-benchmark."""
+    # GC barrier (round-12): after ~300 timed runs the closing sentinel
+    # was consistently 1.4-1.5x the opening one (0.30 -> 0.43/0.55 on an
+    # otherwise idle box) — JVM garbage backlog, not machine load. The
+    # sentinel exists to measure the BOX, so drain collector debt before
+    # timing it; per-query timings are untouched (GC pressure is part of
+    # a query's real cost).
+    spark.catalog.clearCache()
+    spark._jvm.System.gc()
+    time.sleep(1.0)
+    return min_noop_runs(spark, REGISTRY[name], sf_dir, 1)[0]
+
+
 def serve_entries(spark, sf_dir):
     """ANN SERVE-path benchmarks (round-2 verdict item #4): build each
     index ONCE outside the timed region, then time only query serving
@@ -165,24 +197,6 @@ def main():
     # spread ≳2 means even the min may be inflated, don't read deltas.
     runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 
-    def _control(name: str = "q1_pricing_summary") -> float:
-        """Load sentinel: one clean-cache run of a fixed query. Timed at
-        start and end — drift between the two reveals a box that got
-        loaded (or UNloaded: a contended session start) mid-benchmark."""
-        spec = REGISTRY[name]
-        spark.catalog.clearCache()
-        # GC barrier (round-12): after ~300 timed runs the closing
-        # sentinel was consistently 1.4-1.5x the opening one (0.30 ->
-        # 0.43/0.55 on an otherwise idle box) — JVM garbage backlog,
-        # not machine load. The sentinel exists to measure the BOX, so
-        # drain collector debt before timing it; per-query timings are
-        # untouched (GC pressure is part of a query's real cost).
-        spark._jvm.System.gc()
-        time.sleep(1.0)
-        t0 = time.time()
-        spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
     # Two-point control (round-12 verdict item 7): the tiny sentinel
     # (q1, ~0.3s) measures fixed per-query overhead + a small scan; a
     # second, headline-sized sentinel (minhash LSH, ~2s) measures
@@ -213,21 +227,10 @@ def main():
                 file=sys.stderr,
             )
 
-        control_start = _control()
-        control2_start = _control(CONTROL2)
+        control_start = control(spark, sf_dir)
+        control2_start = control(spark, sf_dir, CONTROL2)
         for name in HEADLINE + EXTRA:
-            spec = REGISTRY[name]
-            runs = []
-            for _ in range(runs_per_query):
-                # operators that persist internal frames (LSH) must not
-                # get a free warm start from the previous run's plan cache
-                spark.catalog.clearCache()
-                t0 = time.time()
-                df = spec.spark(spark, sf_dir)
-                # noop sink: materializes EVERY column/expression (count()
-                # would let Catalyst prune projections and under-measure)
-                df.write.format("noop").mode("overwrite").save()
-                runs.append(round(time.time() - t0, 3))
+            runs = min_noop_runs(spark, REGISTRY[name], sf_dir, runs_per_query)
             _record(name, runs, timings if name in HEADLINE else extra)
 
         # serve path: index built once (untimed), queries timed warm
@@ -241,8 +244,8 @@ def main():
             _record(name, runs, extra)
         for d in persisted:
             d.unpersist()
-        control2_end = _control(CONTROL2)
-        control_end = _control()
+        control2_end = control(spark, sf_dir, CONTROL2)
+        control_end = control(spark, sf_dir)
         # >1 = box got slower while benching; <1 = start was contended;
         # outside [0.5, 2] either way means per-query deltas vs other
         # rounds are unattributable

@@ -222,20 +222,12 @@ def _shingle_pair_stats(
     # (shingle, pair) multiset, so ``inter`` is unchanged — the route
     # is a pure cost/memory decision. ``max_shingle_df`` remains the
     # documented recall-trading cap on top.
-    max_df = (
-        join_sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .agg(F.max("__df").alias("mx"))
-        .first()["mx"]
-        or 0
-    )
+    shingle_df = join_sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+    max_df = shingle_df.agg(F.max("__df").alias("mx")).first()["mx"] or 0
     if max_df > HOT_SHINGLE_DF_THRESHOLD:
-        hot_keys = (
-            join_sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > HOT_SHINGLE_DF_THRESHOLD)
-            .select("shingle")
-        )
+        hot_keys = shingle_df.filter(
+            F.col("__df") > HOT_SHINGLE_DF_THRESHOLD
+        ).select("shingle")
         cold = join_sh.join(F.broadcast(hot_keys), "shingle", "left_anti")
         hot = join_sh.join(F.broadcast(hot_keys), "shingle", "left_semi")
         hot_pairs = (

@@ -59,16 +59,6 @@ def table_diff(prev: pa.Table | None, cur: pa.Table) -> pa.Table:
     )
 
 
-def with_sort_key(
-    changes: DataFrame, pattern: str, group: int = 0, cast: str | None = "int", col: str = "path"
-) -> DataFrame:
-    """D2 — ReSorter: attach a deterministic regex-extracted ordering
-    key (``retools/_retools.py:144-156``). Consumers ``orderBy`` it."""
-    from ..functions.retools import re_sort_key
-
-    return changes.withColumn("sort_key", re_sort_key(F.col(col), pattern, group, cast))
-
-
 def merge_changes(*change_sets: DataFrame) -> DataFrame:
     """D4 — Changes.extend: union of change sets
     (``monitoring/_monitoring.py:31-34``)."""

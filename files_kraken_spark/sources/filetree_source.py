@@ -14,8 +14,10 @@ and get the same FILE_SCHEMA rows with planner integration:
 
 - **Partitioned listing**: each immediate child directory of each root
   becomes one ``InputPartition`` walked executor-side, so listing I/O
-  parallelizes across the cluster exactly like
-  ``listing.list_files_distributed`` (fanout depth 1).
+  parallelizes across the cluster. This is the engine's distributed
+  lister. Driver planning and executor walks share ``listing``'s
+  per-directory step, so depth, matcher and S5 rules are
+  ``list_files``'s own.
 - **Filter pushdown** (``pushFilters``): ``depth <= k`` tightens the
   walk's recursion bound (subtrees below the bound are never entered
   — a real I/O saving on deep trees); ``is_dir = false`` drops
@@ -33,8 +35,10 @@ and get the same FILE_SCHEMA rows with planner integration:
 
 Scale note: ``latestOffset`` does one driver-side metadata walk per
 trigger (cost ≈ the reference's full rescan tick, but row emission is
-executor-side). For 100 TB trees prefer the snapshot watcher, which
-lists distributed and diffs as a join.
+executor-side). The snapshot watcher (``streaming/runtime.Watcher``)
+also walks on the driver and diffs there with Arrow, the way Structured
+Streaming's file source lists on the driver; this source is the one
+lister whose walk runs on executors.
 """
 
 from __future__ import annotations
@@ -55,7 +59,7 @@ from pyspark.sql.datasource import (
     StringStartsWith,
 )
 
-from .listing import FILE_SCHEMA, NameMatcher, _walk
+from .listing import FILE_SCHEMA, NameMatcher, _dir_row, _list_dir, _walk
 
 
 @dataclass
@@ -103,7 +107,7 @@ def _build_matcher(cfg) -> NameMatcher | None:
 
 
 class _FileTreeReaderBase:
-    """Shared partition planning: fanout-1 enumeration on the driver,
+    """Shared partition planning: one-level enumeration on the driver,
     one walk partition per shallow child dir, one rows-partition for
     root-level files (and root-level empty-dir self-candidates)."""
 
@@ -130,48 +134,30 @@ class _FileTreeReaderBase:
 
         return _Wrapped()
 
+    def _dir_matcher(self) -> NameMatcher | None:
+        dm = self.cfg["dir_patterns"]
+        return NameMatcher(patterns=dm) if dm else None
+
     def plan_partitions(self) -> list[_TreePartition]:
         cfg = self.cfg
-        matcher = self._matcher()
         parts: list[_TreePartition] = []
         shallow_rows: list[tuple] = []
         for root in cfg["roots"]:
-            try:
-                entries = sorted(os.scandir(root), key=lambda e: e.name)
-            except (FileNotFoundError, NotADirectoryError, PermissionError):
-                continue
-            for e in entries:
-                try:
-                    is_dir = e.is_dir(follow_symlinks=False)
-                    st = e.stat(follow_symlinks=False)
-                except OSError:
+            for e in _list_dir(root, 0, self._matcher(), self._dir_matcher()):
+                if type(e) is tuple:
+                    shallow_rows.append(e)
                     continue
-                if is_dir:
-                    dm = cfg["dir_patterns"]
-                    if dm and not NameMatcher(patterns=dm).match(e.name):
-                        continue
-                    dir_row = (
-                        e.path, e.name, root, 0, True, 0, int(st.st_mtime * 1e6)
-                    ) if cfg["keep_empty_dirs"] else None
-                    if cfg["max_depth"] is not None and cfg["max_depth"] < 1:
-                        # recursion bound stops at the shallow level:
-                        # the subtree is never entered, so the dir is
-                        # "empty" by the reference's surviving-rows rule
-                        if dir_row is not None:
-                            shallow_rows.append(dir_row)
-                        continue
-                    parts.append(
-                        _TreePartition(
-                            kind="walk", path=e.path, start_depth=1, dir_row=dir_row
-                        )
-                    )
-                else:
-                    if matcher is not None and not matcher.match(e.name):
-                        continue
-                    shallow_rows.append(
-                        (e.path, e.name, root, 0, False, st.st_size,
-                         int(st.st_mtime * 1e6))
-                    )
+                dir_row = _dir_row(e, root, 0) if cfg["keep_empty_dirs"] else None
+                if cfg["max_depth"] is not None and cfg["max_depth"] < 1:
+                    # recursion bound stops at the shallow level: the
+                    # subtree is never entered, so the dir is "empty" by
+                    # the reference's surviving-rows rule
+                    if dir_row is not None:
+                        shallow_rows.append(dir_row)
+                    continue
+                parts.append(
+                    _TreePartition(kind="walk", path=e.path, start_depth=1, dir_row=dir_row)
+                )
         if shallow_rows:
             parts.append(_TreePartition(kind="rows", rows=tuple(shallow_rows)))
         if not parts:  # Spark requires ≥1 partition
@@ -180,8 +166,7 @@ class _FileTreeReaderBase:
 
     def walk_partition(self, part: _TreePartition):
         """Executor-side: emit FILE_SCHEMA tuples for one partition.
-        A walk partition self-determines S5 emptiness — no join needed
-        at fanout depth 1."""
+        A walk partition self-determines S5 emptiness — no join needed."""
         if part.kind == "rows":
             yield from part.rows
             return
@@ -191,7 +176,7 @@ class _FileTreeReaderBase:
             part.path,
             cfg["max_depth"],
             self._matcher(),
-            NameMatcher(patterns=cfg["dir_patterns"]) if cfg["dir_patterns"] else None,
+            self._dir_matcher(),
             cfg["keep_empty_dirs"],
             _depth=part.start_depth,
         ):

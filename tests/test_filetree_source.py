@@ -3,6 +3,7 @@ filter pushdown claims, and the mtime-watermark streaming path."""
 
 from __future__ import annotations
 
+import itertools
 import os
 import time
 
@@ -21,20 +22,49 @@ def _mk_tree(root):
     (root / "top.txt").write_text("t")
 
 
-def test_batch_matches_list_files(spark, tmp_path):
-    _mk_tree(tmp_path)
+FILE_PATTERNS = (r"run_\d+", r".+\.fastq\.gz", r".+\.bam", r".+metrics\.txt", r".+results\.txt")
+DIR_PATTERNS = (r"run_\d+", "bams", "input", "results")
+COLS = ["path", "name", "parent", "depth", "is_dir", "size"]  # all but mtime_us
+
+
+def test_batch_matches_list_files(spark, golden_tree):
+    """Same rows as ``list_files`` on every combination of file matcher
+    × dir matcher × maxDepth × keepEmptyDirs (32 cases), on a tree whose
+    empty dirs sit at depth 0 (``run_3``) and at depths 2-3 below a
+    non-empty run (only the deepest empty level is a row)."""
+    (golden_tree / "run_1" / "input" / "bams" / "results").mkdir(parents=True)
     register_filetree(spark)
-    got = (
-        spark.read.format("filetree")
-        .option("roots", str(tmp_path))
-        .option("keepEmptyDirs", "true")
-        .load()
-    )
-    want = list_files(spark, str(tmp_path), keep_empty_dirs=True)
-    assert sorted(r["path"] for r in got.collect()) == sorted(
-        r["path"] for r in want.collect()
-    )
-    assert got.schema == want.schema
+    for patterns, dir_patterns, max_depth, keep in itertools.product(
+        (None, FILE_PATTERNS), (None, DIR_PATTERNS), (None, 0, 1, 2), (False, True)
+    ):
+        case = (patterns, dir_patterns, max_depth, keep)
+        reader = (
+            spark.read.format("filetree")
+            .option("roots", str(golden_tree))
+            .option("keepEmptyDirs", str(keep).lower())
+        )
+        if patterns:
+            reader = reader.option("patterns", ";".join(patterns))
+        if dir_patterns:
+            reader = reader.option("dirPatterns", ";".join(dir_patterns))
+        if max_depth is not None:
+            reader = reader.option("maxDepth", str(max_depth))
+        got = reader.load()
+        want = list_files(
+            spark,
+            str(golden_tree),
+            max_depth=max_depth,
+            matcher=NameMatcher(patterns=patterns) if patterns else None,
+            dir_matcher=NameMatcher(patterns=dir_patterns) if dir_patterns else None,
+            keep_empty_dirs=keep,
+        )
+        assert got.schema == want.schema, case
+        rows = sorted(tuple(r) for r in want.select(COLS).collect())
+        assert sorted(tuple(r) for r in got.select(COLS).collect()) == rows, case
+        if keep and max_depth is None:
+            assert (str(golden_tree / "run_1" / "input" / "bams" / "results"), True) in {
+                (r[0], r[4]) for r in rows
+            }, case  # non-vacuous: the nested empty dir is a row
 
 
 def test_batch_pattern_and_depth_options(spark, tmp_path):

@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-from files_kraken_spark.sources.listing import (
-    NameMatcher,
-    list_files,
-    list_files_distributed,
-)
+from files_kraken_spark.sources.listing import NameMatcher, list_files
 
 MATCH = NameMatcher(
     patterns=(r"run_\d+", r".+\.fastq\.gz", r".+\.bam", r".+metrics\.txt", r".+results\.txt"),
@@ -68,53 +64,3 @@ def test_multi_root_union(spark, golden_tree):
     both = list_files(spark, [r1, r2])
     assert both.count() == list_files(spark, r1).count() + list_files(spark, r2).count()
 
-
-def test_distributed_matches_driver_listing(spark, golden_tree):
-    a = list_files(spark, str(golden_tree), matcher=MATCH)
-    b = list_files_distributed(spark, str(golden_tree), matcher=MATCH, fanout_depth=1)
-    assert sorted(r["path"] for r in a.collect()) == sorted(
-        r["path"] for r in b.collect()
-    )
-
-
-def test_distributed_deeper_fanout_and_options(spark, golden_tree):
-    for kw in (
-        {"fanout_depth": 2},
-        {"fanout_depth": 2, "max_depth": 1},
-        {"fanout_depth": 3, "dir_matcher": DIRS},
-        {"fanout_depth": 1, "matcher": MATCH, "dir_matcher": DIRS},
-    ):
-        a = list_files(
-            spark,
-            str(golden_tree),
-            matcher=kw.get("matcher"),
-            dir_matcher=kw.get("dir_matcher"),
-            max_depth=kw.get("max_depth"),
-        )
-        b = list_files_distributed(spark, str(golden_tree), **kw)
-        assert sorted(r["path"] for r in a.collect()) == sorted(
-            r["path"] for r in b.collect()
-        ), kw
-
-
-def test_distributed_empty_dir_parity(spark, golden_tree):
-    """S5 parity (r1 verdict item 7): the distributed lister emits the
-    same empty-dir rows as the recursive walker — including shallow
-    empty dirs above the fanout boundary (run_3 at depth 0)."""
-    for kw in (
-        {"fanout_depth": 1},
-        {"fanout_depth": 2},
-        {"fanout_depth": 1, "dir_matcher": DIRS},
-        {"fanout_depth": 2, "matcher": MATCH, "dir_matcher": DIRS},
-    ):
-        a = list_files(
-            spark,
-            str(golden_tree),
-            matcher=kw.get("matcher"),
-            dir_matcher=kw.get("dir_matcher"),
-            keep_empty_dirs=True,
-        )
-        b = list_files_distributed(spark, str(golden_tree), keep_empty_dirs=True, **kw)
-        assert sorted((r["path"], r["is_dir"]) for r in a.collect()) == sorted(
-            (r["path"], r["is_dir"]) for r in b.collect()
-        ), kw

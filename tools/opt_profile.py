@@ -1,8 +1,9 @@
 """Optimization-round harness: isolated per-query timing + plan capture.
 
 For each named registry query, runs N cache-cleared noop-sink
-materializations at the given scale dir (bench.py methodology: min is
-the steady-state cost, spread self-flags contention) and optionally
+materializations at the given scale dir (bench.py's own timed loop and
+q1 control sentinel: min is the steady-state cost, spread self-flags
+contention) and optionally
 writes the `.explain("formatted")` output to
 <plans-dir>/<query>_<tag>.txt so plan-shape claims in the round's
 OPTIMIZATION_*.md are checkable offline.
@@ -21,10 +22,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import control, min_noop_runs
 from files_kraken_spark.queries import REGISTRY
 from files_kraken_spark.session import get_session
 
@@ -69,18 +70,7 @@ def main() -> int:
     # JVM/codegen warmup so the first measured query isn't charged startup
     spark.read.parquet(f"{args.dir}/region.parquet").count()
 
-    def _control() -> float:
-        """bench.py's load sentinel: one clean-cache q1 run, bracketing
-        the block so box drift between profile invocations is visible."""
-        spec = REGISTRY["q1_pricing_summary"]
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-        time.sleep(1.0)
-        t0 = time.time()
-        spec.spark(spark, args.dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
-    c0 = _control()
+    c0 = control(spark, args.dir)
 
     if args.plan_tag:
         os.makedirs(args.plans_dir, exist_ok=True)
@@ -94,14 +84,7 @@ def main() -> int:
             with open(path, "w") as fh:
                 fh.write(plan)
             print(f"# plan -> {path}", file=sys.stderr)
-        runs = []
-        for _ in range(args.runs):
-            spark.catalog.clearCache()
-            t0 = time.time()
-            spec.spark(spark, args.dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(round(time.time() - t0, 3))
+        runs = min_noop_runs(spark, spec, args.dir, args.runs)
         rec = {
             "query": name,
             "min": min(runs),
@@ -111,7 +94,7 @@ def main() -> int:
         }
         print(json.dumps(rec))
         sys.stdout.flush()
-    print(json.dumps({"control": [c0, _control()]}))
+    print(json.dumps({"control": [c0, control(spark, args.dir)]}))
     return 0
 
 

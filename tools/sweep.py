@@ -23,10 +23,10 @@ import math
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import min_noop_runs
 from files_kraken_spark.queries import REGISTRY
 from files_kraken_spark.session import get_session
 
@@ -65,15 +65,7 @@ def main() -> int:
         spec = REGISTRY[name]
         out[name] = {}
         for d in dirs:
-            best = math.inf
-            for _ in range(args.runs):
-                spark.catalog.clearCache()
-                t0 = time.time()
-                spec.spark(spark, d).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.time() - t0)
-            out[name][d] = round(best, 2)
+            out[name][d] = round(min(min_noop_runs(spark, spec, d, args.runs)), 2)
             print(f"{name} @ {d}: {out[name][d]}s", flush=True)
         pts = [out[name][d] for d in dirs]
         if len(pts) >= 2 and pts[-2] > 0:
